@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.streaming.LocalCheckpointFileManager
+
 /** Single place for session config so Verify / Bench / tests / app agree.
   *
   * Scale notes: shuffle partitions match local cores here; on a real cluster
@@ -48,6 +50,13 @@ object GraftSession {
       // the scan declares (key, ts, event_id) ordering and EnsureRequirements
       // elides both the exchange and the sort.
       .config("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
+      // checkpoint logs and state-store files on `file:` paths are written
+      // through java.nio: Hadoop's local filesystem forks a shell per
+      // permission call without its native library, ~50 ms per log file
+      // and at least three log files per micro-batch. Other schemes keep
+      // Spark's default manager, so clusterConf does not set this.
+      .config(LocalCheckpointFileManager.ConfKey,
+        classOf[LocalCheckpointFileManager].getName)
       // keep catalog tables (bucketed writes) out of the repo working dir
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
@@ -109,9 +118,4 @@ object GraftSession {
     "spark.shuffle.compress" -> "true",
     "spark.serializer" -> "org.apache.spark.serializer.KryoSerializer",
     "spark.sql.legacy.parquet.nanosAsLong" -> "true")
-
-  def clusterBuilder(totalCores: Int = 3000): SparkSession.Builder =
-    clusterConf(totalCores).foldLeft(SparkSession.builder().appName("graft")) {
-      case (b, (k, v)) => b.config(k, v)
-    }
 }

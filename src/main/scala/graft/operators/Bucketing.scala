@@ -288,7 +288,9 @@ object Bucketing {
     // where the previous derivation ran a full distinct-collect scan of
     // the tombstone table per compaction. Falls back to that row scan
     // (same Murmur3-pmod the bucketed writer assigns with) if any file
-    // lacks a tag (a foreign, non-bucketed tombstone table).
+    // lacks a tag (a foreign, non-bucketed tombstone table) or the flat
+    // listing finds no data file at all (a partitioned or nested layout
+    // keeps its rows below it; an empty tag set proves nothing).
     val tombLoc = tableLocation(spark, tombTable)
     val tombFs = tombLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombTags =
@@ -296,7 +298,7 @@ object Bucketing {
         .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
         .map(f => bucketIdOf(f.getPath.getName))
     val dirty: Set[Int] =
-      if (tombTags.forall(_.isDefined)) tombTags.flatten.toSet
+      if (tombTags.nonEmpty && tombTags.forall(_.isDefined)) tombTags.flatten.toSet
       else spark.table(tombTable)
         .select(pmod(hash(col(key)), lit(buckets)).cast("int").as("b"))
         .distinct().collect().map(_.getInt(0)).toSet

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.pipeline.FlowPipeline
@@ -7,7 +9,16 @@ import graft.pipeline.FlowPipeline
 /** Declared queries exercising the reference's own dataflow (SURVEY Layer A). */
 object PipelineQueries {
 
-  val fixturePath = "/root/repo/data/flows.jsonl"
+  /** The flow-JSON fixture `data/flows.jsonl` of the checkout these classes
+    * were built in: the nearest ancestor of the class directory (or jar)
+    * that holds it, else `data/flows.jsonl` under the working directory.
+    */
+  lazy val fixturePath: String = {
+    val built = Paths.get(getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Iterator.iterate(built)(_.getParent).takeWhile(_ != null)
+      .map(_.resolve("data/flows.jsonl")).find(Files.isRegularFile(_))
+      .getOrElse(Paths.get("data/flows.jsonl").toAbsolutePath).toString
+  }
 
   /** Q20 — full decode→project→coerce parity over the flow-JSON fixture
     * (FIXTURES §1/§3): malformed line dropped, `{}` kept as a defaults row,
@@ -19,8 +30,8 @@ object PipelineQueries {
 
   val oracle: Map[String, String] = Map(
     "q20_flow_pipeline" ->
-      """WITH raw AS (SELECT unnest(string_split(content, chr(10))) AS value
-        |             FROM read_text('/root/repo/data/flows.jsonl')),
+      s"""WITH raw AS (SELECT unnest(string_split(content, chr(10))) AS value
+        |             FROM read_text('$fixturePath')),
         |j AS (SELECT value AS v FROM raw WHERE json_valid(value) AND json_type(value)='OBJECT')
         |SELECT coalesce(CAST(v->>'TimeFlowStartMs' AS DOUBLE),0.0) AS start,
         | coalesce(CAST(v->>'TimeFlowEndMs' AS DOUBLE),0.0) AS "end",

@@ -86,8 +86,9 @@ object RetrievalQueries {
       .limit(10)
   }
 
-  /** MMR trade-off weight (relevance vs redundancy) and sizes. */
-  val mmrLambda = 0.7
+  /** MMR pool and pick sizes; the trade-off weight λ = 0.7 is fixed in the
+    * integer score below.
+    */
   val mmrPool = 10
   val mmrTake = 5
 

@@ -24,10 +24,6 @@ object SqlGen {
       s" ELSE ${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)})) END)"
   }
 
-  /** Replace-counting occurrences (mirror of TextFunctions.occurrences). */
-  def occSql(hay: String, needle: String): String =
-    s"CAST((length($hay)-length(replace($hay,'$needle','')))/${needle.length} AS BIGINT)"
-
   /** Stopword token hits for a language (mirror of the single-tokenization
     * TextFunctions.stopwordHits).
     */

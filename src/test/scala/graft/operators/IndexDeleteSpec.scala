@@ -93,4 +93,31 @@ class IndexDeleteSpec extends SparkSpec {
     // the tombstone table survives the apply (crash-safety contract)
     assert(spark.table(tomb).count() == base.filter("vec_id % 10 = 3").count())
   }
+
+  test("compactDeletes finds the dirty buckets of a tombstone table the flat listing misses") {
+    // A partitioned tombstone table keeps its rows under `part=*/`: the
+    // top-level listing holds no data file, so no bucket tag says which
+    // buckets are dirty. That must take the row scan, not read as "none".
+    val t = "graft_test_cdel_nested"
+    val tomb = t + "_tomb"
+    val base = spark.range(200).selectExpr(
+      "id AS vec_id", "id % 16 AS cid", "cast(id AS DOUBLE) / 7 AS v")
+    Bucketing.writeBucketedSorted(base, t, "cid", Seq("cid"), buckets)
+    Bucketing.dropStaged(spark, tomb)
+    base.filter("vec_id % 10 = 3").selectExpr("vec_id", "cid", "vec_id % 2 AS part")
+      .write.partitionBy("part").format("parquet").saveAsTable(tomb)
+    assert(dataFiles(tomb).isEmpty, "the tombstone rows sit below the listing")
+
+    val dirty = spark.table(tomb)
+      .select(pmod(hash(col("cid")), lit(buckets)).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    assert(dirty.nonEmpty)
+    val rewritten = Bucketing.compactDeletes(
+      spark, t, tomb, "vec_id", "cid", Seq("cid"), buckets)
+    assert(rewritten == dirty)
+    val got = spark.table(t).orderBy("vec_id").collect().toSeq
+    val want = base.filter("vec_id % 10 <> 3").orderBy("vec_id").collect().toSeq
+    assert(got == want)
+    Bucketing.dropStaged(spark, tomb)
+  }
 }
