@@ -106,13 +106,6 @@ object Bench {
     // The first pass is reported too (`pipeline_rows_per_sec_cold`) so rounds
     // using the pre-r7 single-cold-pass methodology stay comparable; the
     // `pipeline_method` tag marks which regime the headline number comes from.
-    // SPARK_GRAFT_PIPELINE_PRIME=n (default 0 = off): run an n-row priming
-    // pass BEFORE the cold measurement — the cold-start adjudication knob
-    // (r10 verdict item 7): if a tiny prime recovers most of the cold
-    // deficit, the gap is one-time JIT/codegen/stream-init cost, not
-    // anything data-size-proportional.
-    val prime = sys.env.getOrElse("SPARK_GRAFT_PIPELINE_PRIME", "0").toLong
-    if (prime > 0) pipelineThroughput(spark, prime)
     val throughputCold = pipelineThroughput(spark, 500000L)
     val throughput =
       Seq.fill(3)(pipelineThroughput(spark, 500000L)).sorted.apply(1)
@@ -126,11 +119,6 @@ object Bench {
     // noise, but the suite (every SparkEntry.queries entry) keeps growing —
     // 4 total passes matches the wall-clock envelope the driver
     // demonstrably completes.
-    // SPARK_GRAFT_BENCH_GC=false disables the inter-query GC for A/B
-    // adjudication of harness-induced deltas (full GC hygiene trades a
-    // per-query tax for protection against late-suite heap-pressure
-    // blowups; default on — see the r3/r4 adjudication in DESIGN.md).
-    val gcBetween = sys.env.getOrElse("SPARK_GRAFT_BENCH_GC", "true").toBoolean
     val requeried = scala.collection.mutable.ArrayBuffer.empty[String]
     val stillNoisy = scala.collection.mutable.ArrayBuffer.empty[String]
     val results = names.map { n =>
@@ -138,8 +126,8 @@ object Bench {
       // accumulated broadcast blocks / shuffle files: without it, late-suite
       // queries pay earlier queries' heap pressure (observed 1.1 s → 5.1 s
       // on the same query inside a 69-query run) and the medians stop
-      // reflecting plan cost.
-      if (gcBetween) System.gc()
+      // reflecting plan cost (the r3/r4 adjudication in DESIGN.md).
+      System.gc()
       var ts = Seq.fill(3)(once(n)).sorted
       // Contention guard (r10: the driver bench shipped 6x-inflated
       // medians with no marker): a >3x spread across back-to-back runs of

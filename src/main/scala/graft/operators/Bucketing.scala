@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 
 /** Bucketed-table helpers: pre-shuffle a big table ONCE by its join key so
   * every later join/aggregation on that key runs shuffle-free — the batch
@@ -20,9 +22,9 @@ object Bucketing {
     * LOCATION_ALREADY_EXISTS on a location only a dead catalog knew about.
     *
     * `table` must be a SIMPLE (unqualified) name; the orphan sweep resolves
-    * the managed location as warehouse/lowercase(name), which is where the
-    * default database puts it (the catalog lowercases identifiers). The
-    * guard is a strict identifier whitelist, not just a no-dots check:
+    * its location with [[tableLocation]], whose fallback for a table no
+    * live catalog knows is warehouse/lowercase(name). The guard is a strict
+    * identifier whitelist, not just a no-dots check:
     * `Path(parent, child)` IGNORES the parent when the child is absolute, so
     * a name containing `/` could point the recursive orphan delete at an
     * arbitrary directory.
@@ -67,16 +69,18 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Shared drop + orphaned-managed-location sweep (see class doc for why
-    * the strict identifier whitelist matters — `Path(parent, child)`
-    * ignores the parent for absolute children).
+  /** Shared drop + location sweep (see class doc for why the strict
+    * identifier whitelist matters — `Path(parent, child)` ignores the
+    * parent for absolute children). The location is resolved BEFORE the
+    * drop, while the catalog still knows it; the files go whether the
+    * table was managed, re-registered at an explicit LOCATION (which a
+    * bare DROP would leave behind), or orphaned by a dead catalog.
     */
   private def dropWithOrphanSweep(spark: SparkSession, table: String): Unit = {
     require(table.matches("[A-Za-z0-9_]+"),
       s"staged writes need a simple [A-Za-z0-9_]+ table name, got $table")
+    val loc = tableLocation(spark, table)
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(loc)) fs.delete(loc, true)
   }
@@ -169,12 +173,18 @@ object Bucketing {
       case _ => None
     }
 
-  /** Managed location of a staged table (warehouse/lowercase(name) — the
-    * same resolution [[dropWithOrphanSweep]] relies on).
+  /** Where `table`'s files live: the catalog's location for a registered
+    * table (managed, or registered at an explicit LOCATION), else the
+    * default managed location warehouse/lowercase(name) — where the
+    * default database puts a table (the catalog lowercases identifiers) and
+    * where a prior JVM's staged files sit before anything registers them.
     */
-  private def tableLocation(spark: SparkSession, table: String) =
-    new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+  def tableLocation(spark: SparkSession, table: String): Path = {
+    val id = TableIdentifier(table)
+    val catalog = spark.sessionState.catalog
+    if (catalog.tableExists(id)) new Path(catalog.getTableMetadata(id).location)
+    else new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+  }
 
   /** Max data-file count over a bucketed table's buckets (0 for an empty
     * location) — the serving-latency degradation appends accumulate and
@@ -342,7 +352,7 @@ object Bucketing {
     // install new files first, then drop the superseded ones
     newFiles.foreach { f =>
       require(fs.rename(f.getPath,
-        new org.apache.hadoop.fs.Path(loc, f.getPath.getName)),
+        new Path(loc, f.getPath.getName)),
         s"bucket rewrite: failed to move ${f.getPath} into $loc")
     }
     // Deletes happen BEFORE the refresh on purpose: until the refresh, a

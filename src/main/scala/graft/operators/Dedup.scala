@@ -626,8 +626,7 @@ object Dedup {
     * source. Shuffles: the (source, span) distinct and the span-keyed
     * equi-join, both on fixed-width keys; output is ≤ sources² rows.
     */
-  def sourceOverlap(docs: DataFrame, w: Int = 3,
-                    idCol: String = "doc_id", textCol: String = "text",
+  def sourceOverlap(docs: DataFrame, w: Int = 3, textCol: String = "text",
                     srcCol: String = "source"): DataFrame = {
     // Shingles are tagged with their row's source DIRECTLY (r17, guide
     // §3.3 "join first on the un-exploded key and explode after", taken to

@@ -69,9 +69,6 @@ object Staging {
 
   private val markerFile = "_graft_staged.props"
 
-  private def location(spark: SparkSession, table: String): Path =
-    new Path(spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
-
   /** One lock per table group; staging the same artifacts from two threads
     * (parallel suites) must not interleave drop/write/register.
     */
@@ -102,7 +99,7 @@ object Staging {
 
   private def readMarker(spark: SparkSession,
                          table: String): Option[java.util.Properties] = {
-    val mp = new Path(location(spark, table), markerFile)
+    val mp = new Path(Bucketing.tableLocation(spark, table), markerFile)
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(mp)) None
     else {
@@ -134,7 +131,7 @@ object Staging {
       val sort = Option(props.getProperty("sortKey")).getOrElse(key)
       s"CLUSTERED BY ($key) SORTED BY ($sort) INTO $n BUCKETS "
     }.getOrElse("")
-    val loc = location(spark, table).toUri.toString
+    val loc = Bucketing.tableLocation(spark, table).toUri.toString
     spark.sql(
       s"CREATE TABLE $table ($schemaDdl) USING parquet $bucketClause" +
         s"LOCATION '$loc'")
@@ -183,7 +180,7 @@ object Staging {
       if (bs.sortColumnNames.nonEmpty)
         props.setProperty("sortKey", bs.sortColumnNames.mkString(", "))
     }
-    val mp = new Path(location(spark, table), markerFile)
+    val mp = new Path(Bucketing.tableLocation(spark, table), markerFile)
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(mp, true)
     try props.store(out, s"graft staged-artifact marker for $table")

@@ -5,6 +5,8 @@ import scala.collection.mutable
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.operators.Staging
+
 /** JVM-lifetime registry for staged backbone tiers (text token/bigram
   * frames, the dedup shingle→component chain, the graph trade-pair root).
   *
@@ -24,6 +26,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    serializes concurrent first-builders of different tiers, which is
   *    acceptable because suite runs (Verify/Bench) drive queries
   *    sequentially and the tiers of one family chain on each other anyway.
+  *
+  * Catalog-staged artifacts (bucketed tables, serving indexes) go through
+  * [[staged]]: one place decides how such an artifact is named
+  * ([[dirTag]]), cached, fingerprinted and registered.
   *
   * Staleness caveat (deliberate, documented): entries are NOT invalidated
   * if the parquet files under the keyed `dir` are rewritten within one
@@ -69,6 +75,36 @@ object BackboneRegistry {
         names((s, key)) = v
         v
       }
+    }
+
+  /** Per-dir suffix of every staged table and path name: the dir's
+    * basename plus a hash of the FULL dir, so two dirs sharing a basename
+    * never clobber each other's artifacts. `String.hashCode` is fixed by
+    * the JLS, so the suffix is byte-stable across JVMs — which is what
+    * lets a later JVM find (and re-register) a prior one's tables.
+    */
+  def dirTag(dir: String): String =
+    dir.split('/').last.replace('.', '_') +
+      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+
+  /** The catalog-staged artifact tables of `family` for (s, dir) — the one
+    * place the naming, caching, fingerprinting and registering of a staged
+    * artifact is decided. Names are cached under `family:dir` like
+    * [[namesOrBuild]] (reused while every table still exists in the
+    * session's catalog). On a miss, `recipe` gets [[dirTag]] and declares
+    * the tables, the fingerprint config and the stage body ([[Staged]]);
+    * [[Staging.ensure]] then serves the live tables, re-registers a prior
+    * JVM's files whose marker matches the fingerprint of (config, `dir`'s
+    * files), or runs the body. Anything a name depends on (a resolved
+    * width, a list count) belongs inside `recipe`, so a registry hit runs
+    * none of it.
+    */
+  def staged(s: SparkSession, dir: String, family: String)(
+      recipe: String => Staged): Seq[String] =
+    namesOrBuild(s, s"$family:$dir")(_.forall(s.catalog.tableExists)) {
+      val st = recipe(dirTag(dir))
+      Staging.ensure(s, Staging.fingerprint(s, dir, st.config), st.tables)(st.stage())
+      st.tables
     }
 
   /** The cached derived scalar for (s, key) — counts, resolved widths —
@@ -126,4 +162,16 @@ object BackboneRegistry {
   def namesSize(s: SparkSession): Int = synchronized {
     names.keys.count(_._1 eq s)
   }
+}
+
+/** One staged artifact's declaration for [[BackboneRegistry.staged]]: the
+  * catalog tables `stage` creates, and the recipe config folded into their
+  * fingerprint (bump it when the staged content changes shape).
+  */
+final class Staged private (val tables: Seq[String], val config: String,
+                            val stage: () => Unit)
+
+object Staged {
+  def apply(tables: Seq[String], config: String)(stage: => Unit): Staged =
+    new Staged(tables, config, () => stage)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Bucketing, Staging}
+import graft.operators.Bucketing
 
 /** Declared queries over BUCKETED staging tables ([[Bucketing.writeBucketed]])
   * — the durable, cross-job alternative to `localCheckpoint` staging named in
@@ -26,19 +26,10 @@ object BucketedQueries {
     * dead catalog ever created.
     */
   private def stagedTables(s: SparkSession, dir: String): (String, String) = {
-    val ts = BackboneRegistry.namesOrBuild(s, s"bucketed_li_ord:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      // tag includes a hash of the FULL dir (String.hashCode is spec-stable
-      // across JVMs) so two dirs sharing a basename can't clobber each
-      // other's staging tables.
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    val ts = BackboneRegistry.staged(s, dir, "bucketed_li_ord") { tag =>
       val li = s"graft_li_b${buckets}_$tag"
       val ord = s"graft_ord_b${buckets}_$tag"
-      // Cross-JVM reuse: re-register a prior run's tables when the source
-      // data + recipe fingerprint still matches, else stage fresh.
-      Staging.ensure(s, Staging.fingerprint(s, dir, s"bucketed_li_ord:b$buckets"),
-          Seq(li, ord)) {
+      Staged(Seq(li, ord), s"bucketed_li_ord:b$buckets") {
         Bucketing.writeBucketed(
           Tables.lineitem(s, dir).select("l_orderkey", "l_extendedprice", "l_discount"),
           li, "l_orderkey", buckets)
@@ -46,7 +37,6 @@ object BucketedQueries {
           Tables.orders(s, dir).select("o_orderkey", "o_orderstatus"),
           ord, "o_orderkey", buckets)
       }
-      Seq(li, ord)
     }
     (ts(0), ts(1))
   }

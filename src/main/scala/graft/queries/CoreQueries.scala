@@ -1213,28 +1213,25 @@ object CoreQueries {
     * cost is one scaffold plus two cheap projections. At 100 TB this is a
     * staged derived table: the trailing-stat family fans out of one
     * materialization instead of re-walking the event log per metric.
-    * `SPARK_GRAFT_ROLL_BACKBONE=false` disables the cache (parity A/B) —
-    * results are bit-identical in both regimes.
     */
-  private[queries] def rollingScaffold(s: SparkSession, dir: String): DataFrame = {
-    def plan = BandedWindow.trailingRows(
-      Tables.events(s, dir)
-        .select(col("event_type"), col("event_id"), col("ts"), col("value")),
-      key = "event_type", ts = "ts", id = "event_id", n = 20,
-      aggs = Seq(
-        "roll_n" -> (w => count("value").over(w)),
-        // the anomaly predicate compares 6-ROUNDED quantities: Spark
-        // recomputes each bounded frame in row order while DuckDB's window
-        // aggregation merges segment-tree partials, so the raw doubles can
-        // differ in the last ulps — a raw >3sigma compare would be an
-        // engine-dependent boundary (the FIXTURES round-before-compare rule)
-        "roll_avg" -> (w => round(avg("value").over(w), 6)),
-        "roll_sd" -> (w => round(stddev_samp("value").over(w), 6)),
-        "_frame" -> FrameQuantile.sortedFrame(col("value"))))
-    if (!sys.env.getOrElse("SPARK_GRAFT_ROLL_BACKBONE", "true").toBoolean) plan
-    else BackboneRegistry.getOrBuild(s, s"roll:stats:$dir")(
-      plan.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  private[queries] def rollingScaffold(s: SparkSession, dir: String): DataFrame =
+    BackboneRegistry.getOrBuild(s, s"roll:stats:$dir") {
+      BandedWindow.trailingRows(
+        Tables.events(s, dir)
+          .select(col("event_type"), col("event_id"), col("ts"), col("value")),
+        key = "event_type", ts = "ts", id = "event_id", n = 20,
+        aggs = Seq(
+          "roll_n" -> (w => count("value").over(w)),
+          // the anomaly predicate compares 6-ROUNDED quantities: Spark
+          // recomputes each bounded frame in row order while DuckDB's window
+          // aggregation merges segment-tree partials, so the raw doubles can
+          // differ in the last ulps — a raw >3sigma compare would be an
+          // engine-dependent boundary (the FIXTURES round-before-compare rule)
+          "roll_avg" -> (w => round(avg("value").over(w), 6)),
+          "roll_sd" -> (w => round(stddev_samp("value").over(w), 6)),
+          "_frame" -> FrameQuantile.sortedFrame(col("value"))))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** Q64 — rolling-window anomaly detection over the event stream: per
     * event_type ordered by time, each value is scored against the mean and

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.operators.{Bucketing, Dedup, Staging}
+import graft.operators.{Bucketing, Dedup}
 
 /** Shared staged chain for the MinHash-LSH dedup family.
   *
@@ -23,14 +23,9 @@ import graft.operators.{Bucketing, Dedup, Staging}
   * statement as a query); at cluster scale the same tiers live in bucketed
   * staging tables ([[graft.operators.Bucketing]], and
   * `dedup_incr_staged`'s index IS the durable form of the signature/band
-  * tiers). Results are bit-identical with sharing on or off;
-  * `SPARK_GRAFT_DEDUP_BACKBONE=false` restores per-query construction for
-  * A/B adjudication.
+  * tiers).
   */
 object DedupBackbone {
-
-  private def enabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_DEDUP_BACKBONE", "true").toBoolean
 
   /** LSH/verify constants shared by every consumer (and the SqlGen-rendered
     * oracles, which derive from the same Dedup defaults).
@@ -39,19 +34,12 @@ object DedupBackbone {
 
   private def tier(s: SparkSession, dir: String, name: String)
                   (build: => DataFrame): DataFrame =
-    if (!enabled) build
-    else BackboneRegistry.getOrBuild(s, s"dedup:$name:$dir")(
+    BackboneRegistry.getOrBuild(s, s"dedup:$name:$dir")(
       build.localCheckpoint(true))
 
-  /** Distinct (doc_id, m) shingle-hash frame — the root every tier shares.
-    * In off-mode this still checkpoints PER CALL (the pre-backbone queries
-    * staged their sh frame the same way, because verify references it
-    * twice in one DAG); only the cross-query reuse is disabled.
-    */
+  /** Distinct (doc_id, m) shingle-hash frame — the root every tier shares. */
   def shingles(s: SparkSession, dir: String): DataFrame =
-    if (!enabled)
-      Dedup.shingleHashes(Tables.documents(s, dir)).distinct().localCheckpoint(true)
-    else tier(s, dir, "sh") {
+    tier(s, dir, "sh") {
       Dedup.shingleHashes(Tables.documents(s, dir)).distinct()
     }
 
@@ -112,27 +100,19 @@ object DedupBackbone {
     * shuffled-hash). Cross-JVM reuse via [[graft.operators.Staging]]: the
     * table is rebuilt only when the source dir's fingerprint changes.
     */
-  def shingleArrays(s: SparkSession, dir: String): DataFrame =
-    if (!enabled) Dedup.shingleArrays(shingles(s, dir))
-    else {
-      val t = BackboneRegistry.namesOrBuild(s, s"dedup:sharrtbl:$dir")(
-        _.forall(s.catalog.tableExists)) {
-        val tag = dir.split('/').last.replace('.', '_') +
-          "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
-        val name = s"graft_dedup_sharr_b${arrayBuckets}_$tag"
-        Staging.ensure(s,
-          // v3: array elements sorted at build (SortedBinaryIntersectCount
-          // contract) — the tag bump restages any v2-era unsorted table
-          Staging.fingerprint(s, dir, s"dedup_sharr:b$arrayBuckets:v3"),
-          Seq(name)) {
-          Bucketing.writeBucketedSorted(
-            Dedup.shingleArrays(shingles(s, dir)), name, "doc_id",
-            Seq("doc_id"), arrayBuckets)
-        }
-        Seq(name)
+  def shingleArrays(s: SparkSession, dir: String): DataFrame = {
+    val t = BackboneRegistry.staged(s, dir, "dedup:sharrtbl") { tag =>
+      val name = s"graft_dedup_sharr_b${arrayBuckets}_$tag"
+      // v3: array elements sorted at build (SortedBinaryIntersectCount
+      // contract) — the tag bump restages any v2-era unsorted table
+      Staged(Seq(name), s"dedup_sharr:b$arrayBuckets:v3") {
+        Bucketing.writeBucketedSorted(
+          Dedup.shingleArrays(shingles(s, dir)), name, "doc_id",
+          Seq("doc_id"), arrayBuckets)
       }
-      Bucketing.read(s, t.head)
     }
+    Bucketing.read(s, t.head)
+  }
 
   /** Jaccard-verified candidate pairs at [[jaccardThreshold]], WITH the
     * unrounded score — score consumers round it, pair consumers project it

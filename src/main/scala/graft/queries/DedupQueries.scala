@@ -222,22 +222,16 @@ object DedupQueries {
   }
 
   /** The staged incremental-dedup corpus index ([[Dedup.stageMinhashIndex]]
-    * over docs below [[incrCutoff]]), built once per (session, dir) — same
-    * memo discipline as the other staging caches: keyed on the session and
-    * re-validated against its catalog.
+    * over docs below [[incrCutoff]]), built once per (session, dir)
+    * ([[BackboneRegistry.staged]]).
     */
   private def incrTables(s: SparkSession, dir: String): (String, String) = {
-    val ts = BackboneRegistry.namesOrBuild(s, s"incr_minhash:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    val ts = BackboneRegistry.staged(s, dir, "incr_minhash") { tag =>
       val (sigT, bandT) = (s"graft_incr_sig_$tag", s"graft_incr_bands_$tag")
-      val fp = graft.operators.Staging.fingerprint(s, dir, s"incr_minhash:cut$incrCutoff")
-      graft.operators.Staging.ensure(s, fp, Seq(sigT, bandT)) {
+      Staged(Seq(sigT, bandT), s"incr_minhash:cut$incrCutoff") {
         Dedup.stageMinhashIndex(
           Tables.spread(Tables.documents(s, dir)).filter(col("doc_id") < incrCutoff), sigT, bandT)
       }
-      Seq(sigT, bandT)
     }
     (ts(0), ts(1))
   }

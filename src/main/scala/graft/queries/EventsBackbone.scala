@@ -36,40 +36,23 @@ import graft.operators.{Bucketing, Staging}
   * batches, the contract degrades, compaction restores it — is a separate
   * declared flow ([[lifecycle]], `q96_events_lifecycle`), the r9 verdict's
   * "demo staging vs 100 TB event log" gap closed end to end.
-  *
-  * `SPARK_GRAFT_EVENTS_BACKBONE=false` routes every consumer back to the
-  * raw parquet scan for A/B adjudication — results are bit-identical, only
-  * the plan changes (the differential spec pins both).
   */
 object EventsBackbone {
 
   val buckets = 8
 
-  private def enabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_EVENTS_BACKBONE", "true").toBoolean
-
-  /** Session-validated staged-table names, held by [[BackboneRegistry]]
-    * (session-evicted, r10) and re-validated against the catalog — a second
-    * session in one JVM has a fresh in-memory catalog, so a dir-only hit
-    * would hand it names only a dead catalog created.
-    */
+  /** The two sorted staged tables ([[BackboneRegistry.staged]]). */
   private def stagedTables(s: SparkSession, dir: String): (String, String) = {
-    val ts = BackboneRegistry.namesOrBuild(s, s"events_sorted:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    val ts = BackboneRegistry.staged(s, dir, "events_sorted") { tag =>
       val byU = s"graft_ev_user_b${buckets}_$tag"
       val byT = s"graft_ev_type_b${buckets}_$tag"
-      Staging.ensure(s,
-        Staging.fingerprint(s, dir, s"events_sorted_user_type:b$buckets:v1"),
-        Seq(byU, byT)) {
+      Staged(Seq(byU, byT), s"events_sorted_user_type:b$buckets:v1") {
         val ev = Tables.events(s, dir)
         Bucketing.writeBucketedSorted(ev, byU, "user_id",
           Seq("user_id", "ts", "event_id"), buckets)
         Bucketing.writeBucketedSorted(ev, byT, "event_type",
           Seq("event_type", "ts", "event_id"), buckets)
       }
-      Seq(byU, byT)
     }
     (ts(0), ts(1))
   }
@@ -78,15 +61,13 @@ object EventsBackbone {
     * scan itself satisfies every per-user window and aggregation.
     */
   def byUser(s: SparkSession, dir: String): DataFrame =
-    if (!enabled) Tables.events(s, dir)
-    else Bucketing.read(s, stagedTables(s, dir)._1)
+    Bucketing.read(s, stagedTables(s, dir)._1)
 
   /** Events clustered on `event_type`, sorted (event_type, ts, event_id):
     * the scan satisfies the rolling-anomaly/median windows.
     */
   def byType(s: SparkSession, dir: String): DataFrame =
-    if (!enabled) Tables.events(s, dir)
-    else Bucketing.read(s, stagedTables(s, dir)._2)
+    Bucketing.read(s, stagedTables(s, dir)._2)
 
   /** Zone width for the time-clustered copy: 3 days of micros. Time-range
     * queries prune whole zones via the zone-map stats before touching a
@@ -99,32 +80,19 @@ object EventsBackbone {
     * time-skipping layout: a time-range query resolves qualifying zones
     * from the tiny per-zone min/max stats table and probes them as a
     * bucket-pruned IN-list (the C29/C66 serving-index idiom pointed at
-    * TIME), so the scan reads only the overlapping zones' files. Disabled
-    * backbone falls back to the raw scan with the zone column derived
-    * inline — same rows, no pruning (the A/B contract every backbone
-    * keeps).
+    * TIME), so the scan reads only the overlapping zones' files.
     */
   def byZone(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    def zoned(df: DataFrame): DataFrame =
-      df.withColumn("zone", expr(s"unix_micros(ts) div $zoneMicros"))
-    if (!enabled) zoned(Tables.events(s, dir))
-    else {
-      val t = BackboneRegistry.namesOrBuild(s, s"events_zoned:$dir")(
-        _.forall(s.catalog.tableExists)) {
-        val tag = dir.split('/').last.replace('.', '_') +
-          "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
-        val name = s"graft_ev_zone_b${buckets}_$tag"
-        Staging.ensure(s,
-          Staging.fingerprint(s, dir, s"events_zoned:b$buckets:zw$zoneMicros:v1"),
-          Seq(name)) {
-          Bucketing.writeBucketedSorted(zoned(Tables.events(s, dir)), name,
-            "zone", Seq("zone", "ts", "event_id"), buckets)
-        }
-        Seq(name)
+    val t = BackboneRegistry.staged(s, dir, "events_zoned") { tag =>
+      val name = s"graft_ev_zone_b${buckets}_$tag"
+      Staged(Seq(name), s"events_zoned:b$buckets:zw$zoneMicros:v1") {
+        Bucketing.writeBucketedSorted(
+          Tables.events(s, dir).withColumn("zone", expr(s"unix_micros(ts) div $zoneMicros")),
+          name, "zone", Seq("zone", "ts", "event_id"), buckets)
       }
-      Bucketing.read(s, t.head)
     }
+    Bucketing.read(s, t.head)
   }
 
   /** Day-PARTITIONED staged copy of events plus its calendar dimension —
@@ -141,8 +109,7 @@ object EventsBackbone {
     */
   def dayPartitioned(s: SparkSession, dir: String): (String, String) = {
     import org.apache.spark.sql.functions._
-    val tag = dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    val tag = BackboneRegistry.dirTag(dir)
     // source-content fingerprint in the liveness probe (r12 ADVICE): a
     // corpus regenerated in place re-stages instead of q107 reading stale
     // partitions against a fresh DuckDB oracle
@@ -172,8 +139,7 @@ object EventsBackbone {
     * [[lifecycleTable]] — the rewrite is the point).
     */
   def zoneLifecycleTable(dir: String): String =
-    "graft_ev_zlc_b" + buckets + "_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    s"graft_ev_zlc_b${buckets}_${BackboneRegistry.dirTag(dir)}"
 
   /** The ingest half of the zone-map story (q105): stage the pre-cutoff
     * events zone-clustered, APPEND the post-cutoff batch (only the batch
@@ -215,8 +181,7 @@ object EventsBackbone {
     * deliberately NOT registry-cached; the rewrite is the point).
     */
   def lifecycleTable(dir: String): String =
-    "graft_ev_lc_b" + buckets + "_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    s"graft_ev_lc_b${buckets}_${BackboneRegistry.dirTag(dir)}"
 
   private def lifecycleCols(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
@@ -303,8 +268,7 @@ object EventsBackbone {
     * clobbering each other's cycle mid-flight).
     */
   def deltaTable(dir: String): String =
-    "graft_ev_ld_b" + buckets + "_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    s"graft_ev_ld_b${buckets}_${BackboneRegistry.dirTag(dir)}"
 
   /** `q97_compact_delta` — the INCREMENTAL table-service variant of the
     * q96 cycle, exercising [[Bucketing.compactDelta]]: stage the

@@ -31,16 +31,14 @@ object GraphQueries {
     * injective — and [[Graph.commonNeighbors]] re-distincts internally, so
     * sharing the deduped root is value-neutral for every consumer.)
     */
-  private def customerSupplierPairs(s: SparkSession, dir: String): DataFrame = {
-    def build = Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey"), col("l_suppkey"))
-      .distinct()
-    if (!sys.env.getOrElse("SPARK_GRAFT_GRAPH_BACKBONE", "true").toBoolean) build
-    else BackboneRegistry.getOrBuild(s, s"graph:pairs:$dir")(
-      build.localCheckpoint(true))
-  }
+  private def customerSupplierPairs(s: SparkSession, dir: String): DataFrame =
+    BackboneRegistry.getOrBuild(s, s"graph:pairs:$dir")(
+      Tables.orders(s, dir).select(col("o_orderkey"), col("o_custkey"))
+        .join(Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_suppkey")),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey"), col("l_suppkey"))
+        .distinct()
+        .localCheckpoint(true))
 
   /** Distinct trade edges customer→supplier in parity encoding. */
   private def tradeEdges(s: SparkSession, dir: String): DataFrame =
@@ -250,8 +248,8 @@ object GraphQueries {
     * data), so the derivation is one equi-join on the order key into a
     * partial-aggregable pair count.
     */
-  private def partPairs(s: SparkSession, dir: String): DataFrame = {
-    def build = {
+  private def partPairs(s: SparkSession, dir: String): DataFrame =
+    BackboneRegistry.getOrBuild(s, s"graph:partpairs:$dir") {
       val li = Tables.lineitem(s, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
       li.as("x")
@@ -259,11 +257,8 @@ object GraphQueries {
           col("x.ok") === col("y.ok") && col("x.pk") < col("pk2"))
         .groupBy(col("x.pk").as("a"), col("pk2").as("b"))
         .agg(count(lit(1)).as("support"))
+        .localCheckpoint(true)
     }
-    if (!sys.env.getOrElse("SPARK_GRAFT_GRAPH_BACKBONE", "true").toBoolean) build
-    else BackboneRegistry.getOrBuild(s, s"graph:partpairs:$dir")(
-      build.localCheckpoint(true))
-  }
 
   /** Shared edge-derivation SQL: the parity-encoded symmetrized trade graph
     * with per-source degree (mirrored pairs cannot collide — src is even,

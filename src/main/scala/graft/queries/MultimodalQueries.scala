@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.multimodal.{FakeDecoder, Media, MediaRecord}
-import graft.operators.{Bucketing, Similarity, Staging}
+import graft.operators.{Bucketing, Similarity}
 
 /** Multimodal-column queries: binary payloads + typed metadata through the
   * mapPartitions decode/feature/frame operators. The decode itself is the
@@ -140,21 +140,16 @@ object MultimodalQueries {
     * inside the pruned scan. Cross-JVM reuse via Staging fingerprints.
     */
   private def mediaAnnTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"mm_ann:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "mm_ann") { tag =>
       val kc = SimilarityQueries.adaptiveKc(s, dir)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_mm_ann_k${kc}_$tag"
-      val fp = Staging.fingerprint(s, dir, s"mm_ann:k$kc:pl_kind:v2")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"mm_ann:k$kc:pl_kind:v2") {
         val me = mediaEmb(s, dir)
         val cent = me.filter(col("vec_id") < kc)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         Similarity.stageIvfBucketed(me, cent, t, buckets = kc,
           payloadCols = Seq("kind"))
       }
-      Seq(t)
     }.head
 
   /** `mm_search` — CROSS-MODAL retrieval (r12 verdict item 3): the
@@ -283,14 +278,10 @@ object MultimodalQueries {
     * by (frame_idx < 4 by the decoder's contract).
     */
   private def mediaFrameAnnTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"mm_fann:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    BackboneRegistry.staged(s, dir, "mm_fann") { tag =>
       val kc = SimilarityQueries.adaptiveKc(s, dir)
       val t = s"graft_mm_fann_k${kc}_$tag"
-      val fp = Staging.fingerprint(s, dir, s"mm_fann:k$kc:pl_kind:v2")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"mm_fann:k$kc:pl_kind:v2") {
         val fe = frameEmb(s, dir)
           .withColumn("fid", col("doc_id") * 4 + col("frame_idx"))
         val cent = fe.filter(col("doc_id") < kc && col("frame_idx") === 0)
@@ -298,7 +289,6 @@ object MultimodalQueries {
         Similarity.stageIvfBucketed(fe, cent, t, buckets = kc, idCol = "fid",
           vecCol = "fv", payloadCols = Seq("doc_id", "frame_idx", "kind"))
       }
-      Seq(t)
     }.head
 
   /** `mm_search_maxsim` — MULTI-VECTOR media retrieval (r14 verdict item

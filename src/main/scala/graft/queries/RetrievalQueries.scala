@@ -277,21 +277,16 @@ object RetrievalQueries {
        |GROUP BY tf.doc_id ORDER BY bm25 DESC, doc_id LIMIT $limit""".stripMargin
   }
 
-  /** The staged lexical index, built once per (session, dir) and
-    * re-validated against the catalog — same cache discipline as the staged
-    * ANN tables.
+  /** The staged lexical index (postings + stats ledger), built once per
+    * (session, dir) ([[BackboneRegistry.staged]]) — same cache discipline
+    * as the staged ANN tables.
     */
   private def lexTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"lexidx:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    BackboneRegistry.staged(s, dir, "lexidx") { tag =>
       val t = s"graft_lexidx_$tag"
-      val fp = graft.operators.Staging.fingerprint(s, dir, s"lexidx:b$lexBuckets")
-      graft.operators.Staging.ensure(s, fp, Seq(t, s"${t}_stats")) {
+      Staged(Seq(t, s"${t}_stats"), s"lexidx:b$lexBuckets") {
         graft.operators.TextIndex.stageIndex(Tables.documents(s, dir), t, lexBuckets)
       }
-      Seq(t)
     }.head
 
   /** BM25 top-10 for [[lexTerms]] served from the staged inverted index
@@ -305,8 +300,7 @@ object RetrievalQueries {
       k1 = TextQueries.bm25K1, b = TextQueries.bm25B)
 
   def lexDeleteTable(dir: String): String =
-    "graft_lexdel_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    "graft_lexdel_" + BackboneRegistry.dirTag(dir)
 
   /** `search_lexical_delete` — DOCUMENT DELETION for the staged lexical
     * index, the text twin of `sim_index_delete` shaped by a structural

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import graft.Tables
-import graft.operators.{Similarity, Staging}
+import graft.operators.Similarity
 
 /** ANN search queries over `embeddings` (C12). `q19_cosine_topk` in
   * CoreQueries is the exact baseline; this adds the LSH-bucketed scale path.
@@ -790,13 +790,6 @@ object SimilarityQueries {
 
   private val stagedWidth = new AdaptiveWidth(stagedPlanes)
 
-  /** Dev-probe accessor (r17): [[graft.LifecycleProbe]] mirrors the LSH
-    * delete lifecycle phase-by-phase and must resolve the SAME adaptive
-    * width the declared query stages with.
-    */
-  private[graft] def stagedPlanesFor(s: SparkSession, dir: String): Int =
-    stagedWidth(s, dir)
-
   /** Storage buckets for the staged ANN tables. 16 means a 9-code Hamming-1
     * probe can touch at most 9 buckets — the pruning PlanAuditSpec asserts.
     * At 100 TB this would be thousands (bucket count sizes the per-bucket
@@ -814,16 +807,12 @@ object SimilarityQueries {
     * catalog knew about.
     */
   private def annTables(s: SparkSession, dir: String): (String, String) = {
-    val ts = BackboneRegistry.namesOrBuild(s, s"ann:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    val ts = BackboneRegistry.staged(s, dir, "ann") { tag =>
       val planes = stagedWidth(s, dir)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val lsh = s"graft_ann_lsh_p${planes}_$tag"
       val ivf = s"graft_ann_ivf_$tag"
-      val fp = Staging.fingerprint(s, dir,
-        s"ann_lsh_ivf:p$planes:lb$stagedLshBuckets:ib$stagedIvfBuckets:c${Similarity.ivfCentroids}")
-      Staging.ensure(s, fp, Seq(lsh, ivf)) {
+      Staged(Seq(lsh, ivf),
+        s"ann_lsh_ivf:p$planes:lb$stagedLshBuckets:ib$stagedIvfBuckets:c${Similarity.ivfCentroids}") {
         val emb = Tables.embeddings(s, dir)
         Similarity.stageLshBucketed(emb, lsh, planes, stagedLshBuckets)
         import org.apache.spark.sql.functions.col
@@ -831,7 +820,6 @@ object SimilarityQueries {
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         Similarity.stageIvfBucketed(emb, cent, ivf, stagedIvfBuckets)
       }
-      Seq(lsh, ivf)
     }
     (ts(0), ts(1))
   }
@@ -845,19 +833,13 @@ object SimilarityQueries {
     * would live in the ONE index, this isolates the experiment.
     */
   private def annFilteredTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"annf:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "annf") { tag =>
       val planes = stagedWidth(s, dir)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_ann_lshf_p${planes}_$tag"
-      val fp = Staging.fingerprint(s, dir,
-        s"ann_lsh_filtered:p$planes:lb$stagedLshBuckets:pl_label:v1")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"ann_lsh_filtered:p$planes:lb$stagedLshBuckets:pl_label:v1") {
         Similarity.stageLshBucketed(Tables.embeddings(s, dir), t, planes,
           stagedLshBuckets, payloadCols = Seq("label"))
       }
-      Seq(t)
     }.head
 
   /** `sim_filter_topk` — filtered vector search off the staged index:
@@ -918,15 +900,10 @@ object SimilarityQueries {
     * pruned probe scan.
     */
   private def annFilteredIvfTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"annfivf:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "annfivf") { tag =>
       val kc = adaptiveIvfK(s, dir)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_ann_ivff_k${kc}_$tag"
-      val fp = Staging.fingerprint(s, dir,
-        s"ann_ivf_filtered:k$kc:pl_label:v2")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"ann_ivf_filtered:k$kc:pl_label:v2") {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, dir)
         val cent = emb.filter(col("vec_id") < kc)
@@ -934,7 +911,6 @@ object SimilarityQueries {
         Similarity.stageIvfBucketed(emb, cent, t, buckets = kc,
           payloadCols = Seq("label"))
       }
-      Seq(t)
     }.head
 
   /** `sim_filter_ivf` — filtered vector search on the IVF arm: top-10 among
@@ -1009,18 +985,13 @@ object SimilarityQueries {
     * count resolves to the 16 floor, so the oracle texts coincide.
     */
   private def pqTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"ann_pq:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "ann_pq") { tag =>
       val kc = adaptiveIvfK(s, dir)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_ann_ivfpq_k${kc}_$tag"
       // v3: the coarse assignment routes above the floor (r16) — staged
       // content differs from the v2 exact-argmax layout past kc = 16, so
       // cross-JVM reuse of a v2 table would desync from the routed oracles
-      val fp = Staging.fingerprint(s, dir,
-        s"ann_ivfpq:k$kc:pqk${Similarity.pqK}:res1:v3")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"ann_ivfpq:k$kc:pqk${Similarity.pqK}:res1:v3") {
         val emb = Tables.embeddings(s, dir)
         import org.apache.spark.sql.functions.col
         val cent = emb.filter(col("vec_id") < kc)
@@ -1029,7 +1000,6 @@ object SimilarityQueries {
           Similarity.pqCodebookResidual(emb, cent, centroidsN = kc), t,
           buckets = kc, centroidsN = kc)
       }
-      Seq(t)
     }.head
 
   /** Top-10 by ADC via the STAGED IVF-PQ index: the probe reads only the 2
@@ -1159,21 +1129,16 @@ object SimilarityQueries {
     * thousands of buckets — the regime bucketed tables are built for.
     */
   private def annAdaptiveTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"annivfa:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "annivfa") { tag =>
       val kc = adaptiveIvfK(s, dir)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_ann_ivfa_k${kc}_$tag"
-      val fp = Staging.fingerprint(s, dir, s"ann_ivf_adaptive:k$kc:v1")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"ann_ivf_adaptive:k$kc:v1") {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, dir)
         val cent = emb.filter(col("vec_id") < kc)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         Similarity.stageIvfBucketed(emb, cent, t, buckets = kc)
       }
-      Seq(t)
     }.head
 
   /** `sim_ivf_staged_adaptive` — the staged IVF probe at the DATA-SCALED
@@ -1218,22 +1183,17 @@ object SimilarityQueries {
     * routed through √kc super-lists instead of the full exact argmax.
     */
   private def annTwoLevelTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"annivf2:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "annivf2") { tag =>
       val kc = adaptiveIvfK(s, dir)
       val g = Similarity.groupsFor(kc)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_ann_ivf2_k${kc}_$tag"
-      val fp = Staging.fingerprint(s, dir, s"ann_ivf_2level:k$kc:g$g:v1")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"ann_ivf_2level:k$kc:g$g:v1") {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, dir)
         val cent = emb.filter(col("vec_id") < kc)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
         Similarity.stageIvfBucketedTwoLevel(emb, cent, g, t, buckets = kc)
       }
-      Seq(t)
     }.head
 
   /** `sim_ivf_staged_2level` — the adaptive staged probe over ROUTED
@@ -1292,8 +1252,7 @@ object SimilarityQueries {
     * without invalidating the other staged-arm queries mid-session).
     */
   def compactIvfTable(dir: String): String =
-    "graft_ann_ivfc_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    "graft_ann_ivfc_" + BackboneRegistry.dirTag(dir)
 
   /** `sim_index_compact` — the serving-index MAINTENANCE lifecycle the
     * append paths created and r13's verdict item 2 demanded an answer for:
@@ -1345,8 +1304,7 @@ object SimilarityQueries {
   val deleteResidues = Seq(3L, 7L)
 
   def deleteIvfTable(dir: String): String =
-    "graft_ann_ivfd_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    "graft_ann_ivfd_" + BackboneRegistry.dirTag(dir)
 
   /** `sim_index_delete` — TOMBSTONE DELETES for a staged index, the last
     * lifecycle op the serving family owed (append = C29, file decay =
@@ -1395,8 +1353,7 @@ object SimilarityQueries {
   }
 
   def lshDeleteTable(dir: String): String =
-    "graft_ann_lshd_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    "graft_ann_lshd_" + BackboneRegistry.dirTag(dir)
 
   /** `sim_lsh_delete` — tombstone deletion for the staged LSH arm (r16),
     * completing the deletion story across ALL FOUR staged index families
@@ -1443,8 +1400,7 @@ object SimilarityQueries {
   }
 
   def pqDeleteTable(dir: String): String =
-    "graft_ann_ivfpqd_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    "graft_ann_ivfpqd_" + BackboneRegistry.dirTag(dir)
 
   /** `sim_ivfpq_delete` — TOMBSTONE DELETES for the staged IVF-PQ CODE
     * table (r16, verdict item 4): C205 gave the plain staged IVF arm a
@@ -1502,8 +1458,7 @@ object SimilarityQueries {
     * stage/swap/drop freely without invalidating them mid-session).
     */
   def rotateIvfTable(dir: String): String =
-    "graft_ann_ivfr_" + dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
+    "graft_ann_ivfr_" + BackboneRegistry.dirTag(dir)
 
   /** Query batch for the rotation gate (r16, verdict item 2): vec_ids
     * 0..2 — the batch-recall harness's frame. The r15 gate decided the
@@ -1679,18 +1634,12 @@ object SimilarityQueries {
     * count, routed above the floor ([[stageIvfAt]]).
     */
   private def annTrainedTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"annivft:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "annivft") { tag =>
       val kc = adaptiveIvfK(s, dir)
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_ann_ivft_k${kc}_$tag"
-      val fp = Staging.fingerprint(s, dir,
-        s"ann_ivf_trained:k$kc:it$trainedIters:v2")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"ann_ivf_trained:k$kc:it$trainedIters:v2") {
         stageIvfAt(Tables.embeddings(s, dir), trainedCent(s, dir), t, kc)
       }
-      Seq(t)
     }.head
 
   /** `sim_ivf_trained_staged` — the trained codebook SERVED (r14): C17's
@@ -1751,15 +1700,10 @@ object SimilarityQueries {
     * space. A separate artifact so the raw arm's tables stay untouched.
     */
   private def annWhiteTable(s: SparkSession, dir: String): String =
-    BackboneRegistry.namesOrBuild(s, s"annwhite:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    BackboneRegistry.staged(s, dir, "annwhite") { tag =>
       import org.apache.spark.sql.functions._
-      val tag = dir.split('/').last.replace('.', '_') +
-        "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
       val t = s"graft_ann_ivfw_$tag"
-      val fp = Staging.fingerprint(s, dir,
-        s"ann_ivf_white:ib$stagedIvfBuckets:c${Similarity.ivfCentroids}:v1")
-      Staging.ensure(s, fp, Seq(t)) {
+      Staged(Seq(t), s"ann_ivf_white:ib$stagedIvfBuckets:c${Similarity.ivfCentroids}:v1") {
         val w = whitened(s, dir)
         val cent = w.filter(col("vec_id") < Similarity.ivfCentroids)
           .select(col("vec_id").as("cid"), col("embedding").as("ce"))
@@ -1773,7 +1717,6 @@ object SimilarityQueries {
           assigned.select(col("vec_id"), col("embedding"), col("cid")),
           t, "cid", stagedIvfBuckets)
       }
-      Seq(t)
     }.head
 
   /** Top-[[recallK]] via the staged WHITENED IVF arm: probe-list selection

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{Bucketing, Similarity, TextIndex}
+import graft.queries.BackboneRegistry.dirTag
 import graft.streaming.StreamOps
 
 /** Driver-gate coverage for the streaming twins (r11 verdict item 6).
@@ -33,11 +34,6 @@ import graft.streaming.StreamOps
 object StreamGateQueries {
 
   val replayBatches = 3
-
-  /** Per-dir suffix for staged paths and catalog table names. */
-  private def dirTag(dir: String): String =
-    dir.split('/').last.replace('.', '_') +
-      "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
 
   /** Stage (once per session+dir) a generic replay file set: `build`'s rows
     * range-partitioned by `orderCols` into [[replayBatches]] files with

@@ -25,47 +25,35 @@ import graft.Tables
   * backbone would be staged to parquet (or exchanged once and reused);
   * the per-query plans here are identical either way.
   *
-  * `SPARK_GRAFT_TEXT_BACKBONE=false` disables sharing (every consumer
-  * falls back to its original inline explode) for A/B adjudication of the
-  * caching itself — results are bit-identical in both regimes, only the
-  * physical reuse changes.
-  *
   * Caching lifecycle (eviction on session stop, single-flight builds,
   * stale-on-rewrite caveat) is [[BackboneRegistry]]'s.
   */
 object TextBackbone {
 
-  private def enabled: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_TEXT_BACKBONE", "true").toBoolean
-
   /** One row per non-empty whitespace token occurrence:
     * (doc_id, source, w). Consumers `.select` the columns they need —
     * pruning still happens against the cached columnar batches.
     */
-  def unigrams(s: SparkSession, dir: String): DataFrame = {
-    def plan = Tables.documents(s, dir)
-      .select(col("doc_id"), col("source"),
-        explode(split(lower(col("text")), " ")).as("w"))
-      .filter(col("w") =!= "")
-    if (!enabled) plan
-    else BackboneRegistry.getOrBuild(s, s"text:uni:$dir")(
-      plan.persist(StorageLevel.MEMORY_AND_DISK))
-  }
+  def unigrams(s: SparkSession, dir: String): DataFrame =
+    BackboneRegistry.getOrBuild(s, s"text:uni:$dir")(
+      Tables.documents(s, dir)
+        .select(col("doc_id"), col("source"),
+          explode(split(lower(col("text")), " ")).as("w"))
+        .filter(col("w") =!= "")
+        .persist(StorageLevel.MEMORY_AND_DISK))
 
   /** One row per adjacent non-empty token pair: (doc_id, w1, w2), in
     * document order (the explode preserves nothing BUT the pairing — no
     * consumer depends on row order).
     */
-  def bigrams(s: SparkSession, dir: String): DataFrame = {
-    def plan = Tables.documents(s, dir)
-      .select(col("doc_id"), split(lower(col("text")), " ").as("W"))
-      .filter(size(col("W")) >= 2)
-      .select(col("doc_id"), explode(expr(
-        "transform(sequence(0, size(W)-2), i -> struct(W[i] AS w1, W[i+1] AS w2))")).as("b"))
-      .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
-      .filter(col("w1") =!= "" && col("w2") =!= "")
-    if (!enabled) plan
-    else BackboneRegistry.getOrBuild(s, s"text:bi:$dir")(
-      plan.persist(StorageLevel.MEMORY_AND_DISK))
-  }
+  def bigrams(s: SparkSession, dir: String): DataFrame =
+    BackboneRegistry.getOrBuild(s, s"text:bi:$dir")(
+      Tables.documents(s, dir)
+        .select(col("doc_id"), split(lower(col("text")), " ").as("W"))
+        .filter(size(col("W")) >= 2)
+        .select(col("doc_id"), explode(expr(
+          "transform(sequence(0, size(W)-2), i -> struct(W[i] AS w1, W[i+1] AS w2))")).as("b"))
+        .select(col("doc_id"), col("b.w1").as("w1"), col("b.w2").as("w2"))
+        .filter(col("w1") =!= "" && col("w2") =!= "")
+        .persist(StorageLevel.MEMORY_AND_DISK))
 }

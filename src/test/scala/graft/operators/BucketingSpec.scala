@@ -3,6 +3,7 @@ package graft.operators
 import graft.{SparkSpec, Tables}
 
 class BucketingSpec extends SparkSpec {
+  import spark.implicits._
 
   test("bucketed tables join without a shuffle and match the plain join") {
     val li = Tables.lineitem(spark, sf0001)
@@ -73,6 +74,78 @@ class BucketingSpec extends SparkSpec {
       assert(!plan.contains("Sort ["), plan)
     } finally {
       spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
+  /** Job ids `body` ran. The status store fills from the listener bus in
+    * order, so once a later fence job shows up every job of `body` has too.
+    */
+  private def jobsRunBy(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    def inGroup(g: String)(f: => Unit): Unit = {
+      sc.setJobGroup(g, g)
+      try f finally sc.clearJobGroup()
+    }
+    inGroup(group)(body)
+    inGroup(group + "_fence")(spark.range(1).collect())
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getJobIdsForGroup(group + "_fence").isEmpty &&
+      System.nanoTime() < deadline) Thread.sleep(10)
+    assert(sc.statusTracker.getJobIdsForGroup(group + "_fence").nonEmpty)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("a table registered at a LOCATION outside the warehouse is read where the catalog puts it") {
+    import org.apache.spark.sql.functions._
+    val buckets = 8
+    val ext = java.nio.file.Files.createTempDirectory("graft_extloc_").toString + "/"
+    val run = java.util.UUID.randomUUID().toString.take(8)
+    val (t, tomb) = (s"extloc_$run", s"extloc_tomb_$run")
+    def register(name: String, cols: String): Unit = spark.sql(
+      s"CREATE TABLE $name ($cols) USING parquet CLUSTERED BY (cid) " +
+        s"SORTED BY (cid) INTO $buckets BUCKETS LOCATION '$ext$name'")
+    val warehouse = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+    val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      register(t, "vec_id BIGINT, cid BIGINT")
+      // cid in {0, 1}: at most two buckets hold data, one file per append
+      val rows = spark.range(64).selectExpr("id AS vec_id", "id % 2 AS cid")
+      Bucketing.appendBucketed(rows.filter("vec_id < 32").coalesce(1), t, "cid", buckets)
+      Bucketing.appendBucketed(rows.filter("vec_id >= 32").coalesce(1), t, "cid", buckets)
+      assert(Bucketing.tableLocation(spark, t).toUri.getPath.startsWith(ext))
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(warehouse, t)),
+        "nothing may land at the default managed location")
+      assert(Bucketing.maxFilesPerBucket(spark, t) == 2)
+
+      // co-bucketed tombstones whose buckets hold none of t's files: the
+      // tag fast path reads the tombstone files' bucket ids from THEIR
+      // location and finds nothing to rewrite without running a job (the
+      // row-scan fallback would run one)
+      val used = Seq(0L, 1L).toDF("cid")
+        .select(pmod(hash(col("cid")), lit(buckets)).cast("int")).as[Int].collect().toSet
+      register(tomb, "vec_id BIGINT, cid BIGINT")
+      Bucketing.appendBucketed(
+        spark.range(100, 164).selectExpr("id AS vec_id", "id AS cid")
+          .filter(!pmod(hash(col("cid")), lit(buckets)).isin(used.toSeq: _*))
+          .coalesce(1),
+        tomb, "cid", buckets)
+      assert(spark.table(tomb).count() > 0)
+      var rewritten = Set(-1)
+      val jobs = jobsRunBy(s"extloc_$run") {
+        rewritten = Bucketing.compactDeletes(
+          spark, t, tomb, "vec_id", "cid", Seq("cid"), buckets)
+      }
+      assert(rewritten.isEmpty)
+      assert(jobs == 0, s"the dirty set must come from the tombstone file tags, ran $jobs jobs")
+      assert(spark.table(t).count() == 64)
+
+      // dropStaged sweeps the files where the catalog put them
+      Bucketing.dropStaged(spark, t)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(ext + t)))
+    } finally {
+      Bucketing.dropStaged(spark, t)
+      Bucketing.dropStaged(spark, tomb)
+      new java.io.File(ext).delete()
     }
   }
 }

@@ -127,4 +127,70 @@ class BackboneRegistrySpec extends SparkSpec {
     assert(BackboneRegistry.scalarOrBuild(s2, "spec:scalar") { 7L } == 7L)
     BackboneRegistry.clearSession(s2)
   }
+
+  /** A `staged` artifact over sf0.001 that counts its recipe (name
+    * resolution) and stage-body runs; fresh family and table names per
+    * instance, since the warehouse outlives the JVM.
+    */
+  private final class CountedStage {
+    private val run = java.util.UUID.randomUUID().toString.take(8)
+    val recipes = new AtomicInteger(0)
+    val stages = new AtomicInteger(0)
+    def apply(s: org.apache.spark.sql.SparkSession): String =
+      BackboneRegistry.staged(s, sf0001, s"spec_staged_$run") { tag =>
+        recipes.incrementAndGet()
+        val t = s"bbr_spec_${run}_$tag"
+        Staged(Seq(t), "spec:staged:v1") {
+          stages.incrementAndGet()
+          graft.operators.Bucketing.writeBucketed(
+            s.range(4).selectExpr("id AS k"), t, "k", 2)
+        }
+      }.head
+  }
+
+  test("staged stages once, and a registry hit runs neither the recipe nor the stage") {
+    val a = new CountedStage
+    val t = a(spark)
+    assert(a.recipes.get() == 1 && a.stages.get() == 1)
+    assert(a(spark) == t)
+    assert(a.recipes.get() == 1 && a.stages.get() == 1)
+    assert(spark.table(t).count() == 4)
+    graft.operators.Bucketing.dropStaged(spark, t)
+  }
+
+  test("staged in a second session re-registers from the marker without staging") {
+    val a = new CountedStage
+    val t = a(spark)
+    // what a fresh catalog sees: the staged files and marker, no table
+    // (move the files aside so the managed DROP leaves them)
+    val loc = graft.operators.Bucketing.tableLocation(spark, t)
+    val aside = loc.suffix("_aside")
+    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(loc, aside))
+    spark.sql(s"DROP TABLE $t")
+    assert(fs.rename(aside, loc))
+    val s2 = spark.newSession()
+    assert(a(s2) == t)
+    assert(a.recipes.get() == 2, "the second session resolves its own names")
+    assert(a.stages.get() == 1, "a matching marker re-registers, never re-stages")
+    assert(s2.table(t).count() == 4)
+    BackboneRegistry.clearSession(s2)
+    graft.operators.Bucketing.dropStaged(spark, t)
+  }
+
+  test("staged resolves a dropped table again instead of trusting the cached names") {
+    val a = new CountedStage
+    val t = a(spark)
+    spark.sql(s"DROP TABLE $t") // managed: the files and marker go too
+    assert(a(spark) == t)
+    assert(a.recipes.get() == 2 && a.stages.get() == 2)
+    assert(spark.table(t).count() == 4)
+    graft.operators.Bucketing.dropStaged(spark, t)
+  }
+
+  test("dirTag is byte-stable: a renamed tag would re-stage every warehouse") {
+    // a literal, not a re-derivation: staged table names and their
+    // warehouse directories embed this tag
+    assert(BackboneRegistry.dirTag("/data/graft/sf0.01") == "sf0_01_1i9k903")
+  }
 }
