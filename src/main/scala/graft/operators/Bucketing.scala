@@ -297,14 +297,21 @@ object Bucketing {
     // inside it — the listing IS the exact dirty set, zero Spark jobs,
     // where the previous derivation ran a full distinct-collect scan of
     // the tombstone table per compaction. Falls back to that row scan
-    // (same Murmur3-pmod the bucketed writer assigns with) if any file
-    // lacks a tag (a foreign, non-bucketed tombstone table) or the flat
-    // listing finds no data file at all (a partitioned or nested layout
-    // keeps its rows below it; an empty tag set proves nothing).
+    // (same Murmur3-pmod the bucketed writer assigns with) unless the
+    // catalog says the tombstones are bucketed exactly like the table
+    // (same `key`, same `buckets` — a tag under another count names another
+    // bucket), and also if any file lacks a tag or the flat listing finds
+    // no data file at all (a partitioned or nested layout keeps its rows
+    // below it; an empty tag set proves nothing).
+    val tombId = TableIdentifier(tombTable)
+    val catalog = spark.sessionState.catalog
+    val coBucketed = catalog.tableExists(tombId) &&
+      catalog.getTableMetadata(tombId).bucketSpec
+        .exists(bs => bs.bucketColumnNames == Seq(key) && bs.numBuckets == buckets)
     val tombLoc = tableLocation(spark, tombTable)
     val tombFs = tombLoc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tombTags =
-      (if (tombFs.exists(tombLoc)) tombFs.listStatus(tombLoc).toSeq else Nil)
+      (if (coBucketed && tombFs.exists(tombLoc)) tombFs.listStatus(tombLoc).toSeq else Nil)
         .filter(f => f.isFile && !f.getPath.getName.startsWith("_"))
         .map(f => bucketIdOf(f.getPath.getName))
     val dirty: Set[Int] =

@@ -27,11 +27,18 @@ import org.apache.spark.sql.catalyst.TableIdentifier
   * parquet [CLUSTERED BY ... SORTED BY ... INTO n BUCKETS] LOCATION ...`
   * instead of re-staging — metadata-only, no shuffle, no rewrite.
   *
-  * Crash safety: the marker is written only after `saveAsTable` succeeds,
+  * Path-staged artifacts (replay file sets, partitioned staging dirs under
+  * `java.io.tmpdir`) take the same marker, written and read by the same
+  * Hadoop-FS code, inside the output dir itself. There is nothing to
+  * register: a path whose `_SUCCESS` and matching marker exist is reused
+  * as it stands (a later JVM's first call included), and anything else is
+  * restaged.
+  *
+  * Crash safety: the marker is written only after the stage body returns,
   * and a re-stage deletes the whole location (marker included) before
-  * writing. A crash mid-stage therefore leaves either no directory or a
-  * directory without a marker — both make the next JVM re-stage, never
-  * serve a torn artifact.
+  * writing (`saveAsTable` and `mode("overwrite")` both do). A crash
+  * mid-stage therefore leaves either no directory or a directory without a
+  * marker — both make the next JVM re-stage, never serve a torn artifact.
   *
   * NOT for mutable tables: anything appended to after staging (the
   * incremental-maintenance paths) must keep using fresh names — the marker
@@ -75,31 +82,45 @@ object Staging {
   private val locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
-  /** Ensure `tables` exist in this session's catalog with content staged
-    * under `fingerprint`: fast-path if already registered and current,
-    * re-register from a prior JVM's files when the marker matches, else run
-    * `stage` (which must create every listed table) and write the markers.
+  /** Ensure `tables` exist in this session's catalog and every dir in
+    * `paths` holds content staged under `fingerprint`: fast-path if all are
+    * already current, re-register a prior JVM's table files when every
+    * marker matches, else run `stage` (which must create every listed table
+    * and write every listed path) and write the markers.
     */
-  def ensure(spark: SparkSession, fingerprint: String, tables: Seq[String])
-            (stage: => Unit): Unit = {
-    val lock = locks.computeIfAbsent(tables.sorted.mkString(","), _ => new Object)
+  def ensure(spark: SparkSession, fingerprint: String, tables: Seq[String],
+             paths: Seq[String] = Nil)(stage: => Unit): Unit = {
+    val lock = locks.computeIfAbsent((tables ++ paths).sorted.mkString(","), _ => new Object)
     lock.synchronized {
-      val current = tables.forall(t =>
-        spark.catalog.tableExists(t) && markerMatches(spark, t, fingerprint))
+      def matches(dir: Path) = markerMatches(spark, dir, fingerprint)
+      def loc(t: String) = Bucketing.tableLocation(spark, t)
+      val pathsCurrent = paths.forall(p => pathLive(spark, p) && matches(new Path(p)))
+      val current = pathsCurrent &&
+        tables.forall(t => spark.catalog.tableExists(t) && matches(loc(t)))
       if (!current) {
-        if (tables.forall(t => canRegister(spark, t, fingerprint))) {
+        if (pathsCurrent &&
+            tables.forall(t => !spark.catalog.tableExists(t) && matches(loc(t)))) {
           tables.foreach(register(spark, _))
         } else {
           stage
-          tables.foreach(writeMarker(spark, _, fingerprint))
+          tables.foreach(t => writeMarker(spark, loc(t), tableProps(spark, t, fingerprint)))
+          paths.foreach(p => writeMarker(spark, new Path(p), markerProps(fingerprint)))
         }
       }
     }
   }
 
-  private def readMarker(spark: SparkSession,
-                         table: String): Option[java.util.Properties] = {
-    val mp = new Path(Bucketing.tableLocation(spark, table), markerFile)
+  /** The registry's hit probe for a path-staged dir: the write committed
+    * (`_SUCCESS`) and its marker exists — two stats, no read, no listing.
+    */
+  def pathLive(spark: SparkSession, path: String): Boolean = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(new Path(p, "_SUCCESS")) && fs.exists(new Path(p, markerFile))
+  }
+
+  private def readMarker(spark: SparkSession, dir: Path): Option[java.util.Properties] = {
+    val mp = new Path(dir, markerFile)
     val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(mp)) None
     else {
@@ -112,16 +133,21 @@ object Staging {
     }
   }
 
-  private def markerMatches(spark: SparkSession, table: String,
-                            fingerprint: String): Boolean =
-    readMarker(spark, table).exists(_.getProperty("fingerprint") == fingerprint)
+  private def writeMarker(spark: SparkSession, dir: Path,
+                          props: java.util.Properties): Unit = {
+    val mp = new Path(dir, markerFile)
+    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(mp, true)
+    try props.store(out, s"graft staged-artifact marker for $dir")
+    finally out.close()
+  }
 
-  private def canRegister(spark: SparkSession, table: String,
-                          fingerprint: String): Boolean =
-    !spark.catalog.tableExists(table) && markerMatches(spark, table, fingerprint)
+  private def markerMatches(spark: SparkSession, dir: Path,
+                            fingerprint: String): Boolean =
+    readMarker(spark, dir).exists(_.getProperty("fingerprint") == fingerprint)
 
   private def register(spark: SparkSession, table: String): Unit = {
-    val props = readMarker(spark, table).getOrElse(
+    val props = readMarker(spark, Bucketing.tableLocation(spark, table)).getOrElse(
       throw new IllegalStateException(s"register($table) without a marker"))
     val schemaDdl = props.getProperty("schema")
     val bucketClause = Option(props.getProperty("bucketKey")).map { key =>
@@ -137,42 +163,20 @@ object Staging {
         s"LOCATION '$loc'")
   }
 
-  /** Markers for PATH-staged (non-catalog) artifacts — replay file sets,
-    * partitioned staging dirs — which reuse across JVMs keyed by directory
-    * path. The liveness probe used to be `_SUCCESS`-only (r12 ADVICE): a
-    * source corpus regenerated in place would serve STALE staged files and
-    * fail the oracle gate confusingly instead of re-staging. The marker
-    * records the source fingerprint; a mismatch rebuilds.
-    */
-  def pathMarkerMatches(path: String, fingerprint: String): Boolean = {
-    val dir = new java.io.File(path)
-    val marker = new java.io.File(dir, markerFile)
-    if (!new java.io.File(dir, "_SUCCESS").exists || !marker.exists) false
-    else {
-      val in = new java.io.FileInputStream(marker)
-      try {
-        val props = new java.util.Properties()
-        props.load(in)
-        props.getProperty("fingerprint") == fingerprint
-      } finally in.close()
-    }
-  }
-
-  /** Write the path-staged marker (call only after a successful stage). */
-  def writePathMarker(path: String, fingerprint: String): Unit = {
+  private def markerProps(fingerprint: String): java.util.Properties = {
     val props = new java.util.Properties()
     props.setProperty("fingerprint", fingerprint)
-    val out = new java.io.FileOutputStream(new java.io.File(path, markerFile))
-    try props.store(out, s"graft staged-artifact marker for $path")
-    finally out.close()
+    props
   }
 
-  private def writeMarker(spark: SparkSession, table: String,
-                          fingerprint: String): Unit = {
+  /** A table's marker also carries what [[register]] needs: the schema
+    * DDL and the bucket spec.
+    */
+  private def tableProps(spark: SparkSession, table: String,
+                         fingerprint: String): java.util.Properties = {
     val meta = spark.sessionState.catalog
       .getTableMetadata(TableIdentifier(table))
-    val props = new java.util.Properties()
-    props.setProperty("fingerprint", fingerprint)
+    val props = markerProps(fingerprint)
     props.setProperty("schema", meta.schema.toDDL)
     meta.bucketSpec.foreach { bs =>
       props.setProperty("bucketKey", bs.bucketColumnNames.mkString(", "))
@@ -180,10 +184,6 @@ object Staging {
       if (bs.sortColumnNames.nonEmpty)
         props.setProperty("sortKey", bs.sortColumnNames.mkString(", "))
     }
-    val mp = new Path(Bucketing.tableLocation(spark, table), markerFile)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(mp, true)
-    try props.store(out, s"graft staged-artifact marker for $table")
-    finally out.close()
+    props
   }
 }

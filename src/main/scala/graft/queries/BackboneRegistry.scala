@@ -27,15 +27,18 @@ import graft.operators.Staging
   *    acceptable because suite runs (Verify/Bench) drive queries
   *    sequentially and the tiers of one family chain on each other anyway.
   *
-  * Catalog-staged artifacts (bucketed tables, serving indexes) go through
-  * [[staged]]: one place decides how such an artifact is named
-  * ([[dirTag]]), cached, fingerprinted and registered.
+  * Staged artifacts (bucketed tables, serving indexes, replay and
+  * partitioned file sets) go through [[staged]]: one place decides how
+  * such an artifact is named ([[dirTag]]), cached, fingerprinted and
+  * registered, whether it lives in the catalog or at a path.
   *
-  * Staleness caveat (deliberate, documented): entries are NOT invalidated
-  * if the parquet files under the keyed `dir` are rewritten within one
-  * JVM. The suite contract is that data dirs are immutable for a session's
-  * lifetime; a caller that does rewrite inputs in place must call
-  * [[invalidate]] for the affected (session, prefix) first.
+  * Staleness caveat (deliberate, documented): entries — frames, staged
+  * table and path names, scalars — are NOT invalidated if the parquet
+  * files under the keyed `dir` are rewritten within one JVM; a hit never
+  * re-lists the source. The suite contract is that data dirs are immutable
+  * for a session's lifetime; a caller that does rewrite inputs in place
+  * must call [[invalidate]] for the affected (session, prefix) first,
+  * which drops all three kinds of entry.
   */
 object BackboneRegistry {
 
@@ -87,24 +90,28 @@ object BackboneRegistry {
     dir.split('/').last.replace('.', '_') +
       "_" + java.lang.Integer.toUnsignedString(dir.hashCode, 36)
 
-  /** The catalog-staged artifact tables of `family` for (s, dir) — the one
-    * place the naming, caching, fingerprinting and registering of a staged
-    * artifact is decided. Names are cached under `family:dir` like
-    * [[namesOrBuild]] (reused while every table still exists in the
-    * session's catalog). On a miss, `recipe` gets [[dirTag]] and declares
-    * the tables, the fingerprint config and the stage body ([[Staged]]);
-    * [[Staging.ensure]] then serves the live tables, re-registers a prior
-    * JVM's files whose marker matches the fingerprint of (config, `dir`'s
-    * files), or runs the body. Anything a name depends on (a resolved
-    * width, a list count) belongs inside `recipe`, so a registry hit runs
-    * none of it.
+  /** The staged artifacts of `family` for (s, dir) — catalog tables, then
+    * output paths — the one place the naming, caching, fingerprinting and
+    * registering of a staged artifact is decided. Names are cached under
+    * `family:dir` like [[namesOrBuild]]; a hit checks only that each output
+    * is still there (a table in the session's catalog; a path — a name
+    * with a `/`, which no table name has — by its `_SUCCESS` and marker,
+    * [[Staging.pathLive]]) and lists nothing. On a miss,
+    * `recipe` gets [[dirTag]] and declares the outputs, the fingerprint
+    * config and the stage body ([[Staged]]); [[Staging.ensure]] then serves
+    * the live outputs, reuses a prior JVM's files whose markers match the
+    * fingerprint of (config, `dir`'s files), or runs the body. Anything a
+    * name depends on (a resolved width, a list count) belongs inside
+    * `recipe`, so a hit runs none of it.
     */
   def staged(s: SparkSession, dir: String, family: String)(
       recipe: String => Staged): Seq[String] =
-    namesOrBuild(s, s"$family:$dir")(_.forall(s.catalog.tableExists)) {
+    namesOrBuild(s, s"$family:$dir")(_.forall(n =>
+      if (n.contains('/')) Staging.pathLive(s, n) else s.catalog.tableExists(n))) {
       val st = recipe(dirTag(dir))
-      Staging.ensure(s, Staging.fingerprint(s, dir, st.config), st.tables)(st.stage())
-      st.tables
+      Staging.ensure(s, Staging.fingerprint(s, dir, st.config), st.tables, st.paths)(
+        st.stage())
+      st.tables ++ st.paths
     }
 
   /** The cached derived scalar for (s, key) — counts, resolved widths —
@@ -129,28 +136,23 @@ object BackboneRegistry {
     * stopped context released the storage anyway).
     */
   def clearSession(s: SparkSession): Unit = synchronized {
-    val dead = entries.keys.filter(_._1 eq s).toVector
-    dead.foreach { k =>
-      scala.util.Try(entries(k).unpersist(blocking = false))
-      entries.remove(k)
-    }
-    names.keys.filter(_._1 eq s).toVector.foreach(names.remove)
-    scalars.keys.filter(_._1 eq s).toVector.foreach(scalars.remove)
+    invalidate(s, "")
     hooked.remove(s)
   }
 
-  /** Drop (and best-effort unpersist) the entries of `s` whose key starts
-    * with `prefix` — the hook for callers that rewrite a staged dir in
-    * place within one JVM.
+  /** Drop (and best-effort unpersist) the frames, names and scalars of `s`
+    * whose key starts with `prefix` — the hook for callers that rewrite a
+    * staged dir in place within one JVM.
     */
   def invalidate(s: SparkSession, prefix: String): Unit = synchronized {
-    val hit = entries.keys.filter(k => (k._1 eq s) && k._2.startsWith(prefix)).toVector
-    hit.foreach { k =>
+    def hit[V](m: mutable.Map[(SparkSession, String), V]) =
+      m.keys.filter(k => (k._1 eq s) && k._2.startsWith(prefix)).toVector
+    hit(entries).foreach { k =>
       scala.util.Try(entries(k).unpersist(blocking = false))
       entries.remove(k)
     }
-    names.keys.filter(k => (k._1 eq s) && k._2.startsWith(prefix)).toVector
-      .foreach(names.remove)
+    hit(names).foreach(names.remove)
+    hit(scalars).foreach(scalars.remove)
   }
 
   /** Number of live frame entries for `s` (test observability). */
@@ -165,13 +167,18 @@ object BackboneRegistry {
 }
 
 /** One staged artifact's declaration for [[BackboneRegistry.staged]]: the
-  * catalog tables `stage` creates, and the recipe config folded into their
-  * fingerprint (bump it when the staged content changes shape).
+  * catalog tables and the output dirs (absolute paths) `stage` creates, and
+  * the recipe config folded into their fingerprint (bump it when the staged
+  * content changes shape).
   */
-final class Staged private (val tables: Seq[String], val config: String,
-                            val stage: () => Unit)
+final class Staged private (val tables: Seq[String], val paths: Seq[String],
+                            val config: String, val stage: () => Unit)
 
 object Staged {
   def apply(tables: Seq[String], config: String)(stage: => Unit): Staged =
-    new Staged(tables, config, () => stage)
+    new Staged(tables, Nil, config, () => stage)
+
+  /** An artifact staged as files at `paths`, outside the catalog. */
+  def paths(paths: Seq[String], config: String)(stage: => Unit): Staged =
+    new Staged(Nil, paths, config, () => stage)
 }

@@ -105,32 +105,29 @@ object EventsBackbone {
     * lives in the dimension, not the fact). At 100 TB date-partitioning is
     * the outermost layout every event lake ships, and DPP is what makes
     * `JOIN calendar ON day WHERE is_weekend` read 2/7ths of it instead of
-    * all of it. Returns (factPath, dimPath).
+    * all of it. Returns (factPath, dimPath): one [[Staged.paths]] artifact
+    * under `java.io.tmpdir`, whose markers carry the source fingerprint —
+    * a later JVM reuses both dirs while `dir` is unchanged, and a corpus
+    * regenerated in place re-stages instead of q107 reading stale
+    * partitions against a fresh DuckDB oracle.
     */
   def dayPartitioned(s: SparkSession, dir: String): (String, String) = {
     import org.apache.spark.sql.functions._
-    val tag = BackboneRegistry.dirTag(dir)
-    // source-content fingerprint in the liveness probe (r12 ADVICE): a
-    // corpus regenerated in place re-stages instead of q107 reading stale
-    // partitions against a fresh DuckDB oracle
-    val fp = Staging.fingerprint(s, dir, "events_daypart:v1")
-    val paths = BackboneRegistry.namesOrBuild(s, s"events_daypart:$dir")(
-      _.forall(p => Staging.pathMarkerMatches(p, fp))) {
+    val paths = BackboneRegistry.staged(s, dir, "events_daypart") { tag =>
       val base = System.getProperty("java.io.tmpdir")
       val factPath = new java.io.File(base, s"graft_ev_daypart_$tag").getAbsolutePath
       val dimPath = new java.io.File(base, s"graft_ev_calendar_$tag").getAbsolutePath
-      val fact = Tables.events(s, dir).withColumn("day", to_date(col("ts")))
-      fact.write.mode("overwrite").partitionBy("day").parquet(factPath)
-      // the calendar dim: one row per day with its attributes — written as
-      // its own table (a dim filter that Catalyst could constant-fold into
-      // the fact would test static pruning, not DPP)
-      fact.select(col("day")).distinct()
-        .withColumn("dow", dayofweek(col("day")))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(dimPath)
-      Staging.writePathMarker(factPath, fp)
-      Staging.writePathMarker(dimPath, fp)
-      Seq(factPath, dimPath)
+      Staged.paths(Seq(factPath, dimPath), "events_daypart:v1") {
+        val fact = Tables.events(s, dir).withColumn("day", to_date(col("ts")))
+        fact.write.mode("overwrite").partitionBy("day").parquet(factPath)
+        // the calendar dim: one row per day with its attributes — written as
+        // its own table (a dim filter that Catalyst could constant-fold into
+        // the fact would test static pruning, not DPP)
+        fact.select(col("day")).distinct()
+          .withColumn("dow", dayofweek(col("day")))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(dimPath)
+      }
     }
     (paths.head, paths(1))
   }

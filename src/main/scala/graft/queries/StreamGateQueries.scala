@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.Tables
 import graft.operators.{Bucketing, Similarity, TextIndex}
@@ -35,57 +36,58 @@ object StreamGateQueries {
 
   val replayBatches = 3
 
-  /** Stage (once per session+dir) a generic replay file set: `build`'s rows
-    * range-partitioned by `orderCols` into [[replayBatches]] files with
-    * modified times forced into ascending range order. Equal order keys land
-    * in one file (range partitioner), so ascending-file arrival preserves an
-    * operator's ordering contract across batch cuts.
+  /** Stage a generic replay file set through [[BackboneRegistry.staged]]:
+    * `build`'s rows range-partitioned by `rangeCols` into [[replayBatches]]
+    * files under `java.io.tmpdir`, with modified times forced into ascending
+    * range order. Equal order keys land in one file (range partitioner), so
+    * ascending-file arrival preserves an operator's ordering contract across
+    * batch cuts. The dir's marker records the source fingerprint, so a
+    * later JVM reuses the files while `dir` is unchanged and a corpus
+    * regenerated in place re-stages instead of serving stale files.
     */
   private def stagedReplay(s: SparkSession, dir: String, name: String)(
-      build: => DataFrame, rangeCols: Seq[String], sortCols: Seq[String]): String = {
-    // source-content fingerprint in the liveness probe (r12 ADVICE): a
-    // corpus regenerated in place re-stages instead of serving stale files
-    val fp = graft.operators.Staging.fingerprint(
-      s, dir, s"sg_replay:$name:b$replayBatches:v1")
-    BackboneRegistry.namesOrBuild(s, s"streamgate:$name:$dir")(
-      _.forall(p => graft.operators.Staging.pathMarkerMatches(p, fp))) {
+      build: => DataFrame, rangeCols: Seq[String], sortCols: Seq[String]): String =
+    BackboneRegistry.staged(s, dir, s"streamgate:$name") { tag =>
       val out = new java.io.File(
-        System.getProperty("java.io.tmpdir"),
-        s"graft_replay_${name}_${dirTag(dir)}").getAbsolutePath
-      build
-        .repartitionByRange(replayBatches, rangeCols.map(col): _*)
-        .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-        .write.mode("overwrite").parquet(out)
-      val files = new java.io.File(out).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      files.zipWithIndex.foreach { case (f, i) =>
-        f.setLastModified(1600000000000L + i * 60000L)
+        System.getProperty("java.io.tmpdir"), s"graft_replay_${name}_$tag").getAbsolutePath
+      Staged.paths(Seq(out), s"sg_replay:$name:b$replayBatches:v1") {
+        build
+          .repartitionByRange(replayBatches, rangeCols.map(col): _*)
+          .sortWithinPartitions(sortCols.head, sortCols.tail: _*)
+          .write.mode("overwrite").parquet(out)
+        val files = new java.io.File(out).listFiles()
+          .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        files.zipWithIndex.foreach { case (f, i) =>
+          f.setLastModified(1600000000000L + i * 60000L)
+        }
       }
-      graft.operators.Staging.writePathMarker(out, fp)
-      Seq(out)
     }.head
-  }
 
   /** The events replay set (the projection every events-shaped twin reads). */
-  private def replayPath(s: SparkSession, dir: String): String =
+  private[graft] def replayPath(s: SparkSession, dir: String): String =
     stagedReplay(s, dir, "events")(
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("ts"), col("value")),
       Seq("ts"), Seq("ts", "event_id"))
 
+  /** The documents replay set (doc_id-ordered). */
+  private def docsReplayPath(s: SparkSession, dir: String): String =
+    stagedReplay(s, dir, "docs")(
+      Tables.documents(s, dir).select("doc_id", "source", "text"),
+      Seq("doc_id"), Seq("doc_id"))
+
+  /** The embeddings replay set (vec_id-ordered). */
+  private def embReplayPath(s: SparkSession, dir: String): String =
+    stagedReplay(s, dir, "emb")(
+      Tables.embeddings(s, dir).select("vec_id", "embedding"),
+      Seq("vec_id"), Seq("vec_id"))
+
   /** Read a staged replay back as a [[replayBatches]]-micro-batch stream. */
   private def replaySource(s: SparkSession, path: String): DataFrame = {
     val schema = s.read.parquet(path).schema
     s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(path)
   }
-
-  /** Run `op` over the staged replay as a [[replayBatches]]-micro-batch
-    * stream into a memory sink; returns the sink table as a DataFrame.
-    */
-  private def replay(s: SparkSession, dir: String)(
-      op: DataFrame => DataFrame): DataFrame =
-    replayPathOp(s, replayPath(s, dir))(op)
 
   /** State partitions for the replay streams: the gate's wall-clock floor
     * is per-partition STATE-STORE commits (partitions x stateful ops x
@@ -123,40 +125,17 @@ object StreamGateQueries {
     }
   }
 
-  /** [[replay]] over an arbitrary staged replay path. */
-  private def replayPathOp(s: SparkSession, path: String)(
+  /** Run `op` over the staged replay at `path` as a [[replayBatches]]-
+    * micro-batch stream into a memory sink in `mode`; returns the sink
+    * table as a DataFrame.
+    */
+  private def replay(s: SparkSession, path: String, mode: OutputMode = OutputMode.Append)(
       op: DataFrame => DataFrame): DataFrame = withNarrowState(s) {
     val src = replaySource(s, path)
     val name = s"sg_${java.lang.Long.toUnsignedString(System.nanoTime, 36)}"
     runWithTempCheckpoint(ckpt =>
       op(src).writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append)
-        .option("checkpointLocation", ckpt)
-        .start())
-    s.table(name)
-  }
-
-  /** [[replayComplete]] over an arbitrary staged replay path. */
-  private def replayPathComplete(s: SparkSession, path: String)(
-      op: DataFrame => DataFrame): DataFrame = withNarrowState(s) {
-    val src = replaySource(s, path)
-    val name = s"sg_${java.lang.Long.toUnsignedString(System.nanoTime, 36)}"
-    runWithTempCheckpoint(ckpt =>
-      op(src).writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete)
-        .option("checkpointLocation", ckpt)
-        .start())
-    s.table(name)
-  }
-
-  /** Same, for complete-mode aggregations. */
-  private def replayComplete(s: SparkSession, dir: String)(
-      op: DataFrame => DataFrame): DataFrame = withNarrowState(s) {
-    val src = replaySource(s, replayPath(s, dir))
-    val name = s"sg_${java.lang.Long.toUnsignedString(System.nanoTime, 36)}"
-    runWithTempCheckpoint(ckpt =>
-      op(src).writeStream.format("memory").queryName(name)
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete)
+        .outputMode(mode)
         .option("checkpointLocation", ckpt)
         .start())
     s.table(name)
@@ -220,7 +199,7 @@ object StreamGateQueries {
   def sessions(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "sessions_stream") {
-      replay(s, dir)(df => StreamOps.sessionsStream(df).toDF())
+      replay(s, replayPath(s, dir))(df => StreamOps.sessionsStream(df).toDF())
         .select("user_id", "session", "events", "start_ts", "end_ts")
     }
     val closed = cachedFrame(s, dir, "sessions_batch") {
@@ -245,7 +224,7 @@ object StreamGateQueries {
   def twap(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "twap_stream") {
-      replay(s, dir)(df => StreamOps.twapStream(df).toDF())
+      replay(s, replayPath(s, dir))(df => StreamOps.twapStream(df).toDF())
         .groupBy("event_type")
         .agg(max(struct(col("n"), col("total_us"), col("twap"))).as("f"))
         .select(col("event_type"), col("f.n"), col("f.total_us"), col("f.twap"))
@@ -264,7 +243,7 @@ object StreamGateQueries {
   def wau(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "wau_stream") {
-      replay(s, dir)(df =>
+      replay(s, replayPath(s, dir))(df =>
           StreamOps.wauCoverageStream(df.select(col("user_id"), col("ts"))).toDF())
         .groupBy("day").agg(count(lit(1)).as("wau"))
         .select("day", "wau")
@@ -282,7 +261,7 @@ object StreamGateQueries {
   def anomaly(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "anomaly_stream") {
-      replay(s, dir)(df => StreamOps.anomalyStream(df).toDF())
+      replay(s, replayPath(s, dir))(df => StreamOps.anomalyStream(df).toDF())
         .select("event_type", "event_id", "value", "roll_avg", "roll_sd")
         .orderBy("event_type", "event_id").limit(500)
     }
@@ -299,7 +278,7 @@ object StreamGateQueries {
   def heavy(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "heavy_stream") {
-      replayComplete(s, dir)(df =>
+      replay(s, replayPath(s, dir), OutputMode.Complete)(df =>
           StreamOps.heavyHittersStream(df.select(col("ts"), col("event_type"))))
         .select("w", "event_type", "c")
     }
@@ -328,7 +307,7 @@ object StreamGateQueries {
     import s.implicits._
     val rules = gateRules.toDF("rule_id", "event_type", "lo", "hi")
     val streamed = cachedFrame(s, dir, "expectations_stream") {
-      replayComplete(s, dir)(df =>
+      replay(s, replayPath(s, dir), OutputMode.Complete)(df =>
         StreamOps.expectationsStream(
           df.select(col("ts"), col("event_type"), col("value")), rules))
     }
@@ -365,7 +344,7 @@ object StreamGateQueries {
   def dedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "dedup_stream") {
-      replay(s, dir)(df =>
+      replay(s, replayPath(s, dir))(df =>
         df.select(col("user_id"), col("event_type"),
             date_trunc("DAY", col("ts")).as("day"), col("ts"))
           .withWatermark("ts", "36500 days")
@@ -393,7 +372,7 @@ object StreamGateQueries {
   def distinctSketch(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "distinct_stream") {
-      replayComplete(s, dir)(df =>
+      replay(s, replayPath(s, dir), OutputMode.Complete)(df =>
         StreamOps.distinctUsersStream(df.select(col("ts"), col("user_id"))))
     }
     val batch = cachedFrame(s, dir, "distinct_batch") {
@@ -421,7 +400,7 @@ object StreamGateQueries {
     import s.implicits._
     val acc = 200000
     val streamed = cachedFrame(s, dir, "percentiles_stream") {
-      replayComplete(s, dir)(df =>
+      replay(s, replayPath(s, dir), OutputMode.Complete)(df =>
         StreamOps.valuePercentilesStream(df, accuracy = acc))
     }
     val batch = cachedFrame(s, dir, "percentiles_batch") {
@@ -442,7 +421,7 @@ object StreamGateQueries {
   def quality(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "quality_stream") {
-      replayPathOp(s, docsReplayPath(s, dir))(df => StreamOps.qualityGate(df))
+      replay(s, docsReplayPath(s, dir))(df => StreamOps.qualityGate(df))
         .groupBy("source").agg(count(lit(1)).as("kept"))
     }
     val batch = cachedFrame(s, dir, "quality_batch") {
@@ -494,7 +473,7 @@ object StreamGateQueries {
             col("vts") <= col("cts") + expr("INTERVAL 1 HOUR"))
         .select(col("user_id"), col("click_id"), col("view_id"))
     }
-    val streamed = cachedFrame(s, dir, "join_stream")(replay(s, dir)(pairsOf))
+    val streamed = cachedFrame(s, dir, "join_stream")(replay(s, replayPath(s, dir))(pairsOf))
     val batch = cachedFrame(s, dir, "join_batch") {
       pairsOf(Tables.events(s, dir)
         .select("user_id", "event_type", "ts", "event_id"))
@@ -503,44 +482,36 @@ object StreamGateQueries {
       .toDF("pairs", "diffs")
   }
 
-  /** The documents replay set (doc_id-ordered). */
-  private def docsReplayPath(s: SparkSession, dir: String): String =
-    stagedReplay(s, dir, "docs")(
-      Tables.documents(s, dir).select("doc_id", "source", "text"),
-      Seq("doc_id"), Seq("doc_id"))
-
   /** `stream_index_ann` — C29's streaming ANN-index maintenance under the
     * driver gate: the embeddings corpus replays in [[replayBatches]]
     * batches through [[StreamOps.maintainLshIndex]] (foreachBatch →
     * bucketed append) into a FRESH staged table, which must then equal a
     * full batch restage — row-for-row on (vec_id, lsh_code) AND through a
     * served probe (the spec's append-≡-restage contract, now hash-gated).
-    * The stream arm is dropped and rebuilt every call so a stale file can't
-    * masquerade as a passing diff.
+    * The stream arm is dropped and rebuilt once per session so a stale file
+    * can't masquerade as a passing diff; the batch arm is a deterministic
+    * stage of `dir` ([[BackboneRegistry.staged]]).
     */
   def indexAnn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tag = dirTag(dir)
+    val (planes, buckets) = (Similarity.lshPlanes, 16)
     // stream arm built once per SESSION: dropped fresh, then replay-appended
     // (the contract's "no stale file can masquerade" holds — every session's
     // first call rebuilds from empty before anything is reused)
     val streamT = BackboneRegistry.namesOrBuild(s, s"sg_lsh_stream:$dir")(
       _.forall(s.catalog.tableExists)) {
-      val path = stagedReplay(s, dir, "emb")(
-        Tables.embeddings(s, dir).select("vec_id", "embedding"),
-        Seq("vec_id"), Seq("vec_id"))
-      val t = s"sg_lsh_stream_$tag"
+      val path = embReplayPath(s, dir)
+      val t = s"sg_lsh_stream_${dirTag(dir)}"
       Bucketing.dropStaged(s, t)
       runWithTempCheckpoint(ckpt =>
-        StreamOps.maintainLshIndex(replaySource(s, path), t, ckpt,
-          planes = Similarity.lshPlanes))
+        StreamOps.maintainLshIndex(replaySource(s, path), t, ckpt, planes, buckets))
       Seq(t)
     }.head
-    val fullT = BackboneRegistry.namesOrBuild(s, s"sg_lsh_full:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    val fullT = BackboneRegistry.staged(s, dir, "sg_lsh_full") { tag =>
       val t = s"sg_lsh_full_$tag"
-      Similarity.stageLshBucketed(Tables.embeddings(s, dir), t)
-      Seq(t)
+      Staged(Seq(t), s"sg_lsh_full:p$planes:b$buckets:v1") {
+        Similarity.stageLshBucketed(Tables.embeddings(s, dir), t, planes, buckets)
+      }
     }.head
     val rowDiff = diffCount(
       Bucketing.read(s, streamT).select("vec_id", "lsh_code"),
@@ -557,6 +528,57 @@ object StreamGateQueries {
     Seq((vectors, diffs)).toDF("vectors", "diffs")
   }
 
+  /** Storage buckets of every IVF gate table (stream and batch arms). */
+  private val ivfBuckets = 8
+
+  /** The pinned centroid codebook every IVF gate assigns against: the
+    * first [[Similarity.ivfCentroids]] vectors.
+    */
+  private def ivfCent(s: SparkSession, dir: String): DataFrame =
+    cachedFrame(s, dir, "ivf_cent") {
+      Tables.embeddings(s, dir)
+        .filter(col("vec_id") < Similarity.ivfCentroids)
+        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    }
+
+  /** The IVF gates' probe: the first vector and its 2 nearest lists. */
+  private def ivfProbeVec(s: SparkSession, dir: String): (Array[Float], Seq[Long]) =
+    cachedScalar(s, dir, "ivf_probe_vec") {
+      val v = Tables.embeddings(s, dir).orderBy("vec_id").limit(1)
+        .select("embedding").head().getSeq[Float](0).toArray
+      val cids = ivfCent(s, dir)
+        .select(col("cid"),
+          graft.functions.VectorOps.cosine(col("ce"), typedlit(v)).as("c"))
+        .orderBy(desc("c"), asc("cid")).limit(2)
+        .collect().map(_.getLong(0)).toSeq
+      (v, cids)
+    }
+
+  /** An IVF gate's batch arm: `emb` restaged in full against [[ivfCent]]
+    * as table `<family>_<dirTag>` ([[BackboneRegistry.staged]]); `variant`
+    * ends the fingerprint config and names anything `emb` leaves out.
+    */
+  private def stagedIvf(s: SparkSession, dir: String, family: String, variant: String)(
+      emb: => DataFrame): String =
+    BackboneRegistry.staged(s, dir, family) { tag =>
+      val t = s"${family}_$tag"
+      Staged(Seq(t), s"$family:c${Similarity.ivfCentroids}:b$ivfBuckets:$variant") {
+        Similarity.stageIvfBucketed(emb, ivfCent(s, dir), t, ivfBuckets)
+      }
+    }.head
+
+  /** The IVF gates' certificate: a stream-built table against its batch
+    * arm, row-for-row on (vec_id, cid) plus a bucket-pruned 2-list probe.
+    */
+  private def ivfDiffs(s: SparkSession, dir: String, streamT: String, fullT: String): Long = {
+    val rowDiff = diffCount(
+      Bucketing.read(s, streamT).select("vec_id", "cid"),
+      Bucketing.read(s, fullT).select("vec_id", "cid"))
+    val (qv, probeCids) = ivfProbeVec(s, dir)
+    def probe(t: String) = Similarity.probeStagedIvf(s, t, qv, probeCids)
+    rowDiff + diffCount(probe(streamT), probe(fullT))
+  }
+
   /** `stream_index_ivf` — the IVF maintenance arm under the driver gate,
     * completing the index-maintenance symmetry (LSH C29 / lexical C66 /
     * IVF): the embeddings replay appends per micro-batch into a fresh
@@ -567,44 +589,18 @@ object StreamGateQueries {
     */
   def indexIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tag = dirTag(dir)
-    def cent = cachedFrame(s, dir, "ivf_cent") {
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") < Similarity.ivfCentroids)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    }
     val streamT = BackboneRegistry.namesOrBuild(s, s"sg_ivf_stream:$dir")(
       _.forall(s.catalog.tableExists)) {
-      val path = stagedReplay(s, dir, "emb")(
-        Tables.embeddings(s, dir).select("vec_id", "embedding"),
-        Seq("vec_id"), Seq("vec_id"))
-      val t = s"sg_ivf_stream_$tag"
+      val path = embReplayPath(s, dir)
+      val t = s"sg_ivf_stream_${dirTag(dir)}"
       Bucketing.dropStaged(s, t)
       runWithTempCheckpoint(ckpt =>
-        StreamOps.maintainIvfIndex(replaySource(s, path), cent, t, ckpt))
+        StreamOps.maintainIvfIndex(replaySource(s, path), ivfCent(s, dir), t, ckpt,
+          ivfBuckets))
       Seq(t)
     }.head
-    val fullT = BackboneRegistry.namesOrBuild(s, s"sg_ivf_full:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      val t = s"sg_ivf_full_$tag"
-      Similarity.stageIvfBucketed(Tables.embeddings(s, dir), cent, t)
-      Seq(t)
-    }.head
-    val rowDiff = diffCount(
-      Bucketing.read(s, streamT).select("vec_id", "cid"),
-      Bucketing.read(s, fullT).select("vec_id", "cid"))
-    val (qv, probeCids) = cachedScalar(s, dir, "ivf_probe_vec") {
-      val v = Tables.embeddings(s, dir).orderBy("vec_id").limit(1)
-        .select("embedding").head().getSeq[Float](0).toArray
-      val cids = cent
-        .select(col("cid"),
-          graft.functions.VectorOps.cosine(col("ce"), typedlit(v)).as("c"))
-        .orderBy(desc("c"), asc("cid")).limit(2)
-        .collect().map(_.getLong(0)).toSeq
-      (v, cids)
-    }
-    def probe(t: String) = Similarity.probeStagedIvf(s, t, qv, probeCids)
-    val diffs = rowDiff + diffCount(probe(streamT), probe(fullT))
+    val fullT = stagedIvf(s, dir, "sg_ivf_full", "v1")(Tables.embeddings(s, dir))
+    val diffs = ivfDiffs(s, dir, streamT, fullT)
     val vectors = cachedScalar(s, dir, "vectors")(Tables.embeddings(s, dir).count())
     Seq((vectors, diffs)).toDF("vectors", "diffs")
   }
@@ -625,49 +621,23 @@ object StreamGateQueries {
     */
   def indexCompact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tag = dirTag(dir)
-    def cent = cachedFrame(s, dir, "ivf_cent") {
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") < Similarity.ivfCentroids)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    }
     val streamT = BackboneRegistry.namesOrBuild(s, s"sg_ivfc_stream:$dir")(
       _.forall(s.catalog.tableExists)) {
-      val path = stagedReplay(s, dir, "emb")(
-        Tables.embeddings(s, dir).select("vec_id", "embedding"),
-        Seq("vec_id"), Seq("vec_id"))
-      val t = s"sg_ivfc_stream_$tag"
+      val path = embReplayPath(s, dir)
+      val t = s"sg_ivfc_stream_${dirTag(dir)}"
       Bucketing.dropStaged(s, t)
       runWithTempCheckpoint(ckpt =>
-        StreamOps.maintainIvfIndex(replaySource(s, path), cent, t, ckpt))
+        StreamOps.maintainIvfIndex(replaySource(s, path), ivfCent(s, dir), t, ckpt,
+          ivfBuckets))
       require(Bucketing.maxFilesPerBucket(s, t) >= 2,
         "multi-batch replay must leave multi-file buckets to compact")
-      val rewritten = Bucketing.compactDelta(s, t, "cid", Seq("cid"), 8,
+      val rewritten = Bucketing.compactDelta(s, t, "cid", Seq("cid"), ivfBuckets,
         idCols = Seq("vec_id"))
       require(rewritten.nonEmpty, "compaction must rewrite the dirty buckets")
       Seq(t)
     }.head
-    val fullT = BackboneRegistry.namesOrBuild(s, s"sg_ivf_full:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      val t = s"sg_ivf_full_$tag"
-      Similarity.stageIvfBucketed(Tables.embeddings(s, dir), cent, t)
-      Seq(t)
-    }.head
-    val rowDiff = diffCount(
-      Bucketing.read(s, streamT).select("vec_id", "cid"),
-      Bucketing.read(s, fullT).select("vec_id", "cid"))
-    val (qv, probeCids) = cachedScalar(s, dir, "ivf_probe_vec") {
-      val v = Tables.embeddings(s, dir).orderBy("vec_id").limit(1)
-        .select("embedding").head().getSeq[Float](0).toArray
-      val cids = cent
-        .select(col("cid"),
-          graft.functions.VectorOps.cosine(col("ce"), typedlit(v)).as("c"))
-        .orderBy(desc("c"), asc("cid")).limit(2)
-        .collect().map(_.getLong(0)).toSeq
-      (v, cids)
-    }
-    def probe(t: String) = Similarity.probeStagedIvf(s, t, qv, probeCids)
-    val diffs = rowDiff + diffCount(probe(streamT), probe(fullT))
+    val fullT = stagedIvf(s, dir, "sg_ivf_full", "v1")(Tables.embeddings(s, dir))
+    val diffs = ivfDiffs(s, dir, streamT, fullT)
     val vectors = cachedScalar(s, dir, "vectors")(Tables.embeddings(s, dir).count())
     Seq((vectors, diffs, Bucketing.maxFilesPerBucket(s, streamT).toLong))
       .toDF("vectors", "diffs", "max_files")
@@ -690,69 +660,35 @@ object StreamGateQueries {
     */
   def indexDelete(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tag = dirTag(dir)
-    def cent = cachedFrame(s, dir, "ivf_cent") {
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") < Similarity.ivfCentroids)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-    }
     val residue = SimilarityQueries.deleteResidues.head
     val streamT = BackboneRegistry.namesOrBuild(s, s"sg_ivfd_stream:$dir")(
       _.forall(s.catalog.tableExists)) {
-      val t = s"sg_ivfd_stream_$tag"
+      val t = s"sg_ivfd_stream_${dirTag(dir)}"
       Bucketing.dropStaged(s, t)
       Bucketing.dropStaged(s, t + "_tomb")
-      Similarity.stageIvfBucketed(Tables.embeddings(s, dir), cent, t)
+      Similarity.stageIvfBucketed(Tables.embeddings(s, dir), ivfCent(s, dir), t, ivfBuckets)
       val path = stagedReplay(s, dir, "embdel")(
         Tables.embeddings(s, dir).filter(col("vec_id") % 10 === residue)
           .select("vec_id", "embedding"),
         Seq("vec_id"), Seq("vec_id"))
       runWithTempCheckpoint(ckpt =>
-        StreamOps.maintainIvfDeletes(replaySource(s, path), cent, t + "_tomb", ckpt))
+        StreamOps.maintainIvfDeletes(replaySource(s, path), ivfCent(s, dir), t + "_tomb",
+          ckpt, ivfBuckets))
       // deletes must serve from the tombstones BEFORE any rewrite
-      val (pv, pcids) = cachedScalar(s, dir, "ivf_probe_vec") {
-        val v = Tables.embeddings(s, dir).orderBy("vec_id").limit(1)
-          .select("embedding").head().getSeq[Float](0).toArray
-        val cids = cent
-          .select(col("cid"),
-            graft.functions.VectorOps.cosine(col("ce"), typedlit(v)).as("c"))
-          .orderBy(desc("c"), asc("cid")).limit(2)
-          .collect().map(_.getLong(0)).toSeq
-        (v, cids)
-      }
+      val (pv, pcids) = ivfProbeVec(s, dir)
       val shadowed = Similarity.probeStagedIvfDeletes(s, t, t + "_tomb",
         pv, pcids, k = 50).collect()
       require(shadowed.forall(_.getLong(0) % 10 != residue),
         "a streamed-in tombstone failed to shadow its row")
       val rewritten = Bucketing.compactDeletes(s, t, t + "_tomb",
-        "vec_id", "cid", Seq("cid"), 8)
+        "vec_id", "cid", Seq("cid"), ivfBuckets)
       require(rewritten.nonEmpty, "tombstoned batches must dirty buckets")
       Bucketing.dropStaged(s, t + "_tomb")
       Seq(t)
     }.head
-    val fullT = BackboneRegistry.namesOrBuild(s, s"sg_ivfd_full:$dir")(
-      _.forall(s.catalog.tableExists)) {
-      val t = s"sg_ivfd_full_$tag"
-      Similarity.stageIvfBucketed(
-        Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= residue),
-        cent, t)
-      Seq(t)
-    }.head
-    val rowDiff = diffCount(
-      Bucketing.read(s, streamT).select("vec_id", "cid"),
-      Bucketing.read(s, fullT).select("vec_id", "cid"))
-    val (qv, probeCids) = cachedScalar(s, dir, "ivf_probe_vec") {
-      val v = Tables.embeddings(s, dir).orderBy("vec_id").limit(1)
-        .select("embedding").head().getSeq[Float](0).toArray
-      val cids = cent
-        .select(col("cid"),
-          graft.functions.VectorOps.cosine(col("ce"), typedlit(v)).as("c"))
-        .orderBy(desc("c"), asc("cid")).limit(2)
-        .collect().map(_.getLong(0)).toSeq
-      (v, cids)
-    }
-    def probe(t: String) = Similarity.probeStagedIvf(s, t, qv, probeCids)
-    val diffs = rowDiff + diffCount(probe(streamT), probe(fullT))
+    val fullT = stagedIvf(s, dir, "sg_ivfd_full", s"r$residue:v1")(
+      Tables.embeddings(s, dir).filter(col("vec_id") % 10 =!= residue))
+    val diffs = ivfDiffs(s, dir, streamT, fullT)
     val vectors = cachedScalar(s, dir, "vectors")(Tables.embeddings(s, dir).count())
     val deleted = cachedScalar(s, dir, "deleted_r3") {
       Tables.embeddings(s, dir).filter(col("vec_id") % 10 === residue).count()
@@ -770,22 +706,22 @@ object StreamGateQueries {
     */
   def indexLex(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val tag = dirTag(dir)
+    val buckets = 8
     val streamT = BackboneRegistry.namesOrBuild(s, s"sg_lex_stream:$dir")(
       _.forall(s.catalog.tableExists)) {
-      val t = s"sg_lex_stream_$tag"
+      val t = s"sg_lex_stream_${dirTag(dir)}"
       Bucketing.dropStaged(s, t)
       Bucketing.dropStaged(s, t + "_stats")
       runWithTempCheckpoint(ckpt =>
         StreamOps.maintainLexicalIndex(
-          replaySource(s, docsReplayPath(s, dir)), t, ckpt))
+          replaySource(s, docsReplayPath(s, dir)), t, ckpt, buckets))
       Seq(t)
     }.head
-    val fullT = BackboneRegistry.namesOrBuild(s, s"sg_lex_full:$dir")(
-      _.forall(s.catalog.tableExists)) {
+    val fullT = BackboneRegistry.staged(s, dir, "sg_lex_full") { tag =>
       val t = s"sg_lex_full_$tag"
-      TextIndex.stageIndex(Tables.documents(s, dir), t, buckets = 8)
-      Seq(t)
+      Staged(Seq(t, s"${t}_stats"), s"sg_lex_full:b$buckets:v1") {
+        TextIndex.stageIndex(Tables.documents(s, dir), t, buckets)
+      }
     }.head
     val postDiff = diffCount(Bucketing.read(s, streamT), Bucketing.read(s, fullT))
     val terms = Seq("table", "row")
@@ -818,10 +754,7 @@ object StreamGateQueries {
   def gram(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val streamed = cachedFrame(s, dir, "gram_stream") {
-      val path = stagedReplay(s, dir, "emb")(
-        Tables.embeddings(s, dir).select("vec_id", "embedding"),
-        Seq("vec_id"), Seq("vec_id"))
-      replayPathComplete(s, path)(df =>
+      replay(s, embReplayPath(s, dir), OutputMode.Complete)(df =>
         StreamOps.gramCells(df.select(col("embedding").as("vec"))))
     }
     val batch = cachedFrame(s, dir, "gram_batch") {

@@ -120,4 +120,29 @@ class IndexDeleteSpec extends SparkSpec {
     assert(got == want)
     Bucketing.dropStaged(spark, tomb)
   }
+
+  test("compactDeletes takes the row scan when the tombstones are bucketed at another count") {
+    // a tombstone file's tag is its bucket under the TOMBSTONE table's
+    // count; read as the table's bucket id it names the wrong files, and
+    // the deletes in every other dirty bucket are missed
+    val t = "graft_test_cdel_foreign"
+    val tomb = t + "_tomb"
+    val base = spark.range(200).selectExpr(
+      "id AS vec_id", "id % 16 AS cid", "cast(id AS DOUBLE) / 7 AS v")
+    Bucketing.writeBucketedSorted(base, t, "cid", Seq("cid"), buckets)
+    Bucketing.dropStaged(spark, tomb)
+    Bucketing.appendBucketed(
+      base.filter("vec_id % 10 = 3").select("vec_id", "cid"), tomb, "cid", buckets / 2)
+
+    val dirty = spark.table(tomb)
+      .select(pmod(hash(col("cid")), lit(buckets)).cast("int").as("b"))
+      .distinct().collect().map(_.getInt(0)).toSet
+    val rewritten = Bucketing.compactDeletes(
+      spark, t, tomb, "vec_id", "cid", Seq("cid"), buckets)
+    assert(rewritten == dirty)
+    val got = spark.table(t).orderBy("vec_id").collect().toSeq
+    val want = base.filter("vec_id % 10 <> 3").orderBy("vec_id").collect().toSeq
+    assert(got == want)
+    Bucketing.dropStaged(spark, tomb)
+  }
 }

@@ -110,6 +110,14 @@ class BackboneRegistrySpec extends SparkSpec {
       f.getName != "BackboneRegistry.scala" && txt.contains("TrieMap[(SparkSession")
     }.map(_.getName)
     assert(offenders.isEmpty, s"session-keyed TrieMaps outside the registry: ${offenders.toSeq}")
+    // and only the registry's `staged` fingerprints and ensures an artifact:
+    // a hand-rolled copy elsewhere would decide reuse its own way
+    val ownStaging = srcDir.listFiles().filter(_.getName.endsWith(".scala")).filter { f =>
+      val txt = new String(java.nio.file.Files.readAllBytes(f.toPath))
+      f.getName != "BackboneRegistry.scala" &&
+        (txt.contains("Staging.fingerprint(") || txt.contains("Staging.ensure("))
+    }.map(_.getName)
+    assert(ownStaging.isEmpty, s"staging outside BackboneRegistry.staged: ${ownStaging.toSeq}")
     // and exercising a staged query leaves its resolution in the registry
     val before = BackboneRegistry.namesSize(spark)
     BucketedQueries.q31(spark, sf0001).limit(1).count()
@@ -123,8 +131,11 @@ class BackboneRegistrySpec extends SparkSpec {
       built.incrementAndGet(); 42L
     }
     assert(n == 42L && n == 42L && built.get() == 1)
-    BackboneRegistry.clearSession(s2)
+    // invalidate drops the prefix's scalars too, not just frames and names
+    BackboneRegistry.invalidate(s2, "spec:")
     assert(BackboneRegistry.scalarOrBuild(s2, "spec:scalar") { 7L } == 7L)
+    BackboneRegistry.clearSession(s2)
+    assert(BackboneRegistry.scalarOrBuild(s2, "spec:scalar") { 9L } == 9L)
     BackboneRegistry.clearSession(s2)
   }
 
@@ -186,6 +197,81 @@ class BackboneRegistrySpec extends SparkSpec {
     assert(a.recipes.get() == 2 && a.stages.get() == 2)
     assert(spark.table(t).count() == 4)
     graft.operators.Bucketing.dropStaged(spark, t)
+  }
+
+  /** A path-staged `staged` artifact over `src` that counts its recipe and
+    * stage-body runs; fresh family and dir names per instance, since the
+    * tmpdir outlives the JVM.
+    */
+  private final class CountedPathStage(src: String = sf0001) {
+    private val run = java.util.UUID.randomUUID().toString.take(8)
+    val recipes = new AtomicInteger(0)
+    val stages = new AtomicInteger(0)
+    def apply(s: org.apache.spark.sql.SparkSession): String =
+      BackboneRegistry.staged(s, src, s"spec_path_$run") { tag =>
+        recipes.incrementAndGet()
+        val out = new java.io.File(System.getProperty("java.io.tmpdir"),
+          s"bbr_spec_path_${run}_$tag").getAbsolutePath
+        Staged.paths(Seq(out), "spec:path:v1") {
+          stages.incrementAndGet()
+          s.range(4).write.mode("overwrite").parquet(out)
+        }
+      }.head
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit = {
+    import scala.jdk.CollectionConverters._
+    if (java.nio.file.Files.exists(p))
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
+  }
+
+  test("path-staged artifacts stage once, and a fresh session reuses the dir untouched") {
+    val a = new CountedPathStage
+    val p = a(spark)
+    assert(a.recipes.get() == 1 && a.stages.get() == 1)
+    assert(a(spark) == p)
+    assert(a.recipes.get() == 1 && a.stages.get() == 1, "a registry hit runs nothing")
+    val marker = new java.io.File(p, "_graft_staged.props")
+    val mtime = marker.lastModified
+    val s2 = spark.newSession()
+    assert(a(s2) == p)
+    assert(a.recipes.get() == 2, "the second session resolves its own names")
+    assert(a.stages.get() == 1, "a matching marker reuses the dir, never rewrites it")
+    assert(marker.lastModified == mtime)
+    assert(s2.read.parquet(p).count() == 4)
+    BackboneRegistry.clearSession(s2)
+    deleteTree(new java.io.File(p).toPath)
+  }
+
+  test("a path dir missing _SUCCESS or its marker is staged again") {
+    val a = new CountedPathStage
+    val p = a(spark)
+    assert(new java.io.File(p, "_SUCCESS").delete())
+    assert(a(spark) == p)
+    assert(a.stages.get() == 2, "no _SUCCESS: the hit probe fails and the dir restages")
+    assert(new java.io.File(p, "_graft_staged.props").delete())
+    val s2 = spark.newSession()
+    assert(a(s2) == p)
+    assert(a.stages.get() == 3, "no marker: a fresh session restages")
+    assert(new java.io.File(p, "_graft_staged.props").exists())
+    assert(spark.read.parquet(p).count() == 4)
+    BackboneRegistry.clearSession(s2)
+    deleteTree(new java.io.File(p).toPath)
+  }
+
+  test("a registry hit on a path artifact does not list the source dir") {
+    // fingerprinting lists the source; a hit must not, so a source that is
+    // gone after staging still serves the staged path in the same session
+    val src = java.nio.file.Files.createTempDirectory("bbr_spec_src")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf0001, "region.parquet"),
+      src.resolve("region.parquet"))
+    val a = new CountedPathStage(src.toString)
+    val p = a(spark)
+    deleteTree(src)
+    assert(a(spark) == p)
+    assert(a.recipes.get() == 1 && a.stages.get() == 1)
+    deleteTree(new java.io.File(p).toPath)
   }
 
   test("dirTag is byte-stable: a renamed tag would re-stage every warehouse") {

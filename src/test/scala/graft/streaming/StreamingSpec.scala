@@ -680,10 +680,9 @@ class StreamingSpec extends SparkSpec {
     assert(anom.getLong(1) == 0L, s"anomaly twin diverged: $anom")
     assert(anom.getLong(0) > 0L, "no anomalies — vacuous gate")
     // the staged replay is really several ts-range files in mtime order
-    val dirs = new java.io.File(System.getProperty("java.io.tmpdir"))
-      .listFiles().filter(_.getName.startsWith("graft_replay_events_sf0_001"))
-    assert(dirs.nonEmpty, "replay stage missing")
-    val parts = dirs.head.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    val dir = new java.io.File(graft.queries.StreamGateQueries.replayPath(spark, sf0001))
+    assert(dir.isDirectory, "replay stage missing")
+    val parts = dir.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
     assert(parts.length == graft.queries.StreamGateQueries.replayBatches, parts.toSeq.toString)
     assert(parts.map(_.lastModified).toSeq == parts.map(_.lastModified).sorted.toSeq)
   }
