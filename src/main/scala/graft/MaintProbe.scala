@@ -47,9 +47,7 @@ object MaintProbe {
     spark.sparkContext.setLogLevel("ERROR")
     val kc = SimilarityQueries.adaptiveKc(spark, dir)
     val emb = Tables.embeddings(spark, dir).localCheckpoint(true)
-    val cent = emb.filter(col("vec_id") < kc)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      .localCheckpoint(true)
+    val cent = Similarity.standInCentroids(emb, kc).localCheckpoint(true)
     val t = "graft_maint_probe_ivf"
     Similarity.stageIvfBucketed(emb.filter(col("vec_id") % 4 === 0), cent, t,
       buckets = kc)

@@ -6,6 +6,17 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
 
+/** Shared contract-violation error for the sorted-merge kernels (a plain
+  * object compiles to a static forwarder, so generated Java calls it too).
+  */
+object SortedIntersectCount {
+  def nullElement(): IllegalArgumentException =
+    new IllegalArgumentException(
+      "SortedIntersectCount: null array element — inputs must be null-free " +
+        "ascending-sorted arrays (the staged builders array_sort null-free " +
+        "columns); use array_intersect for null-tolerant semantics")
+}
+
 /** Count of DISTINCT common elements of two ASCENDING-SORTED arrays — the
   * value of `size(array_intersect(a, b))`, computed by a two-pointer merge
   * instead of the generic expression's per-invocation hash set.
@@ -35,17 +46,6 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType}
   * with a contract message instead of an NPE deep in codegen (binary) or
   * a silently-wrong count (long, where `getLong` on a null slot reads 0).
   */
-/** Shared contract-violation error for the sorted-merge kernels (a plain
-  * object compiles to a static forwarder, so generated Java calls it too).
-  */
-object SortedIntersectCount {
-  def nullElement(): IllegalArgumentException =
-    new IllegalArgumentException(
-      "SortedIntersectCount: null array element — inputs must be null-free " +
-        "ascending-sorted arrays (the staged builders array_sort null-free " +
-        "columns); use array_intersect for null-tolerant semantics")
-}
-
 case class SortedBinaryIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 

@@ -128,11 +128,9 @@ object TextFunctions {
       graft.expressions.RollingHashMin(ColumnBridge.expression(c), window))
   }
 
-  /** Word n-grams of the text as an array column (empty array when the doc
-    * is shorter than n words).
+  /** Word n-grams of a token array as an array column (empty array when
+    * the doc is shorter than n words).
     */
-  private def ngrams(c: Column, n: Int): Column = ngramsOf(wsTokens(c), n)
-
   private def ngramsOf(w: Column, n: Int): Column =
     when(size(w) < n, array().cast("array<string>"))
       .otherwise(transform(sequence(lit(0), size(w) - n),

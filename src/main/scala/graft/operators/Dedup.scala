@@ -283,15 +283,6 @@ object Dedup {
   def jaccardOnCandidates(docs: DataFrame, cands: DataFrame, n: Int = 3, threshold: Double = 0.7): DataFrame =
     jaccardOnCandidatesFromShingles(shingleHashes(docs, n).distinct(), cands, threshold)
 
-  /** Jaccard verify from a prebuilt DISTINCT shingle-hash frame.
-    *
-    * Join order matters at scale: starting from the (small) candidate set and
-    * attaching each side's shingles keeps the work ∝ candidates ×
-    * shingles/doc. The naive shingle self-join first would materialize every
-    * co-occurring pair in the corpus — quadratic in the document frequency of
-    * common shingles — before candidates could prune it. Intersections join
-    * on the fixed-width digest `m`, never the raw n-gram string.
-    */
   /** CONTAINMENT verify over the same candidate/shingle frames: score is
     * |A∩B| / min(|A|,|B|) — the asymmetric reading that catches "the small
     * doc is quoted inside the big one" (boilerplate inclusion, excerpt
@@ -306,6 +297,15 @@ object Dedup {
         (col("inter").cast("double") / least(col("n1"), col("n2"))).as("cont"))
       .filter(col("cont") >= threshold)
 
+  /** Jaccard verify from a prebuilt DISTINCT shingle-hash frame.
+    *
+    * Join order matters at scale: starting from the (small) candidate set and
+    * attaching each side's shingles keeps the work ∝ candidates ×
+    * shingles/doc. The naive shingle self-join first would materialize every
+    * co-occurring pair in the corpus — quadratic in the document frequency of
+    * common shingles — before candidates could prune it. Intersections join
+    * on the fixed-width digest `m`, never the raw n-gram string.
+    */
   def jaccardOnCandidatesFromShingles(shm: DataFrame, cands: DataFrame, threshold: Double): DataFrame =
     intersectionWithSizes(shm, cands)
       .select(col("d1"), col("d2"),

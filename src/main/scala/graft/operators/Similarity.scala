@@ -135,14 +135,85 @@ object Similarity {
       .limit(k)
   }
 
-  /** Exact cosine top-k vs one stored vector, by id. */
+  /** Exact cosine top-k vs one stored vector, by id — [[exactTopK]] over
+    * the whole corpus, query row included.
+    */
   def bruteForceTopK(emb: DataFrame, queryId: Long, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val q = emb.filter(col(idCol) === queryId).select(col(vecCol).as("qe"))
-    emb.crossJoin(broadcast(q))
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    exactTopK(emb, queryRow(emb, queryId, idCol, vecCol), k, idCol, vecCol)
+
+  /** Stored vector `queryId` as the one-row query frame (`qe`) that
+    * [[exactTopK]] broadcasts.
+    */
+  def queryRow(emb: DataFrame, queryId: Long, idCol: String = "vec_id",
+               vecCol: String = "embedding"): DataFrame =
+    emb.filter(col(idCol) === queryId).select(col(vecCol).as("qe"))
+
+  /** Exact cosine top-k of a POPULATION frame against a one-row query
+    * frame `q` (column `qe`): broadcast the query, score every population
+    * row, TakeOrdered by (cos_sim DESC, id ASC). The one ground-truth
+    * definition every recall row grades against — the caller's population
+    * carries the row's truth semantics (the whole corpus for single-query
+    * rows, the corpus minus the query for batch rows, the predicate's
+    * survivors for filtered rows).
+    */
+  def exactTopK(pop: DataFrame, q: DataFrame, k: Int, idCol: String = "vec_id",
+                vecCol: String = "embedding"): DataFrame =
+    pop.crossJoin(broadcast(q))
       .select(col(idCol), round(VectorOps.cosine(col(vecCol), col("qe")), 6).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc(idCol))
       .limit(k)
+
+  /** LATE-INTERACTION (MaxSim) top-k: each candidate document scores
+    * `Σ_q max_d dot(q, d)` over its vectors (`cands`: `docCol`, `vecCol`)
+    * against the broadcast query-vector set (`q`: `qid`, `qVecCol`). Both
+    * reductions are partial-aggregable groupBys; maxima are 6-rounded and
+    * summed as DECIMAL, so the cross-vector sum is order-independent and
+    * engine-exact. Served arms and their exact truths rank through this one
+    * tail — they differ only in which candidate vectors they pass.
+    */
+  def maxSimTopK(cands: DataFrame, q: DataFrame, k: Int, docCol: String,
+                 vecCol: String, qVecCol: String): DataFrame =
+    cands.join(broadcast(q))
+      .select(col(docCol), col("qid"), VectorOps.dot(col(vecCol), col(qVecCol)).as("d"))
+      .groupBy(docCol, "qid").agg(max(col("d")).as("mx"))
+      .groupBy(docCol)
+      .agg(sum(round(col("mx"), 6).cast("decimal(18,6)")).as("sdec"))
+      .select(col(docCol), round(col("sdec").cast("double"), 6).as("maxsim"))
+      .orderBy(desc("maxsim"), asc(docCol))
+      .limit(k)
+
+  /** The recall harness: recall@k of an ANN `arm` against its exact
+    * `truth`, both frames keyed by `keys :+ idCol`. One aggregation for
+    * every reading — truth LEFT JOIN arm, hits counted per `keys` group —
+    * so a group whose arm finds nothing reads `hits = 0, recall = 0.0`
+    * instead of vanishing. `keys = Nil` is the single-query form (one
+    * global row); a `query_id` key is the per-query batch form.
+    * Output: `keys ++ (k, hits, recall)`, ordered by `keys`.
+    */
+  def recallAt(truth: DataFrame, arm: DataFrame, k: Int, idCol: String = "vec_id",
+               keys: Seq[String] = Nil): DataFrame = {
+    val on = keys :+ idCol
+    val rows = truth.select(on.map(col): _*)
+      .join(arm.select(on.map(col) :+ lit(1).as("hit"): _*), on, "left")
+      .groupBy(keys.map(col): _*)
+      .agg(count(col("hit")).as("hits"))
+      .select(keys.map(col) ++ Seq(lit(k).as("k"), col("hits"),
+        round(col("hits") / lit(k.toDouble), 6).as("recall")): _*)
+    if (keys.isEmpty) rows else rows.orderBy(keys.map(col): _*)
+  }
+
+  /** The labelled form of [[recallAt]] — one row per `(label, arm)`, for
+    * the tuning curves that sweep one knob against a single truth: each
+    * arm is tagged with its label and the readings come out of the same
+    * aggregation, keyed by `labelCol` (a `Long` column).
+    */
+  def recallCurve(truth: DataFrame, arms: Seq[(Long, DataFrame)], k: Int,
+                  labelCol: String, idCol: String = "vec_id"): DataFrame = {
+    def tagged(f: DataFrame => DataFrame): DataFrame = arms
+      .map { case (l, arm) => f(arm).select(lit(l).as(labelCol), col(idCol)) }
+      .reduce(_ unionAll _)
+    recallAt(tagged(_ => truth), tagged(identity), k, idCol, Seq(labelCol))
   }
 
   /** LSH-bucketed top-k vs one stored vector: candidates are rows whose code
@@ -234,33 +305,16 @@ object Similarity {
   def centroidsFor(n: Long): Int =
     math.max(ivfCentroids, math.ceil(math.sqrt(n / 256.0)).toInt)
 
-  /** Deterministic Lloyd/k-means refinement of IVF centroids over a bounded
-    * systematic sample (ids ≡ 0 mod stride, stride sized so the sample stays
-    * ≤ `sampleMax` rows — the standard move: an IVF codebook is trained on a
-    * sample, then assignment runs over the full corpus).
-    *
-    * Everything distributed-cheap by construction: per iteration, assignment
-    * is a broadcast of k centroids + `max_by` argmax over the sample; the
-    * new centroids are an elementwise mean via posexplode + two partial-
-    * aggregable groupBys. Only the k centroid rows themselves (the model,
-    * not data) ever leave the cluster, via `localCheckpoint` truncating the
-    * per-iteration lineage. Fixed init (k smallest-id vectors), fixed
-    * iteration count, ties toward smaller cid, empty clusters keep their
-    * previous centroid — deterministic up to floating-point summation order
-    * in the means (which is why the ORACLED query keeps the untrained
-    * stand-in centroids: a codebook is a model artifact, not a query result).
-    *
-    * Since cosine ignores magnitude, the unnormalized mean IS the spherical
-    * k-means update (the mean's direction maximizes within-cluster summed
-    * cosine), so the objective is monotone non-decreasing per iteration.
-    *
-    * The per-position means are ORDER-INDEPENDENT: each cluster's component
-    * values are collected, sorted, and summed in that fixed order (then
-    * divided and cast to float) — so the trained codebook is bit-identical
-    * across partitionings AND across engines, which is what lets the full
-    * train→assign→probe path be oracle-hash-checked (`sim_ivf_trained`).
-    * The collect is bounded by the sample size, never the corpus.
+  /** The deterministic STAND-IN codebook: the `k` smallest-id vectors as
+    * centroids (`cid` = the row's own id, `ce` = its vector). Every
+    * untrained IVF arm, its DuckDB oracle (`cent AS (... WHERE vec_id <
+    * k)`) and [[trainCentroids]]' default init start from this prefix; a
+    * trained codebook swaps in under the same (cid, ce) schema.
     */
+  def standInCentroids(emb: DataFrame, k: Int, idCol: String = "vec_id",
+                       vecCol: String = "embedding"): DataFrame =
+    emb.filter(col(idCol) < k).select(col(idCol).as("cid"), col(vecCol).as("ce"))
+
   /** k-means|| seeding (Bahmani et al., VLDB 2012, "Scalable k-means++"):
     * oversample ~`2k` candidates per round with keep-probability
     * ∝ squared cosine distance to the seeds so far, for `rounds` rounds,
@@ -341,6 +395,33 @@ object Similarity {
       .select(col("cid"), col("ce").cast("array<float>").as("ce"))
   }
 
+  /** Deterministic Lloyd/k-means refinement of IVF centroids over a bounded
+    * systematic sample (ids ≡ 0 mod stride, stride sized so the sample stays
+    * ≤ `sampleMax` rows — the standard move: an IVF codebook is trained on a
+    * sample, then assignment runs over the full corpus).
+    *
+    * Everything distributed-cheap by construction: per iteration, assignment
+    * is a broadcast of k centroids + `max_by` argmax over the sample; the
+    * new centroids are an elementwise mean via posexplode + two partial-
+    * aggregable groupBys. Only the k centroid rows themselves (the model,
+    * not data) ever leave the cluster, via `localCheckpoint` truncating the
+    * per-iteration lineage. Fixed init ([[standInCentroids]]), fixed
+    * iteration count, ties toward smaller cid, empty clusters keep their
+    * previous centroid — deterministic up to floating-point summation order
+    * in the means (which is why the ORACLED query keeps the untrained
+    * stand-in centroids: a codebook is a model artifact, not a query result).
+    *
+    * Since cosine ignores magnitude, the unnormalized mean IS the spherical
+    * k-means update (the mean's direction maximizes within-cluster summed
+    * cosine), so the objective is monotone non-decreasing per iteration.
+    *
+    * The per-position means are ORDER-INDEPENDENT: each cluster's component
+    * values are collected, sorted, and summed in that fixed order (then
+    * divided and cast to float) — so the trained codebook is bit-identical
+    * across partitionings AND across engines, which is what lets the full
+    * train→assign→probe path be oracle-hash-checked (`sim_ivf_trained`).
+    * The collect is bounded by the sample size, never the corpus.
+    */
   def trainCentroids(emb: DataFrame, k: Int = ivfCentroids, iters: Int = 3,
                      sampleMax: Long = 4096,
                      idCol: String = "vec_id", vecCol: String = "embedding",
@@ -354,9 +435,7 @@ object Similarity {
     val sample = emb.filter(pmod(col(idCol), lit(stride)) === 0)
       .select(col(idCol), col(vecCol))
       .localCheckpoint(true)
-    var cent = initOpt.getOrElse(
-        emb.filter(col(idCol) < k)
-          .select(col(idCol).as("cid"), col(vecCol).as("ce")))
+    var cent = initOpt.getOrElse(standInCentroids(emb, k, idCol, vecCol))
       .localCheckpoint(true)
     for (_ <- 0 until iters) {
       val asn = sample.crossJoin(broadcast(cent))
@@ -393,11 +472,8 @@ object Similarity {
               nprobe: Int = 2, idCol: String = "vec_id", vecCol: String = "embedding",
               trained: Option[DataFrame] = None,
               nOpt: Option[Long] = None): DataFrame = {
-    val cent = trained.getOrElse {
-      val centroidsN = centroidsNOpt.getOrElse(centroidsFor(nOpt.getOrElse(emb.count())))
-      emb.filter(col(idCol) < centroidsN)
-        .select(col(idCol).as("cid"), col(vecCol).as("ce"))
-    }
+    val cent = trained.getOrElse(standInCentroids(emb,
+      centroidsNOpt.getOrElse(centroidsFor(nOpt.getOrElse(emb.count()))), idCol, vecCol))
 
     // assignment: nearest centroid per vector (ties -> smallest cid) — r16:
     // the map-only [[nearestCidCol]] kernel over the collected artifact
@@ -414,15 +490,48 @@ object Similarity {
         vecs(ids.indexOf(queryId)).toArray
       else queryVecOf(emb, idCol, vecCol, queryId)
     val probeCids = nearestCidsFor(qe, ids, vecs, nprobe)
-    emb
-      .select(col(idCol), col(vecCol),
-        nearestCidCol(col(vecCol), ids, vecs).as("cid"))
-      .filter(col("cid").isin(probeCids: _*))
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), typedlit(qe)), 6).as("cos_sim"))
+    cosineTopK(
+      emb.select(col(idCol), col(vecCol),
+          nearestCidCol(col(vecCol), ids, vecs).as("cid"))
+        .filter(col("cid").isin(probeCids: _*)),
+      qe, k, idCol, vecCol)
+  }
+
+  /** Exact cosine top-k of probe candidates against a literal query
+    * vector — the ranking tail every probe shares.
+    */
+  private def cosineTopK(cands: DataFrame, queryVec: Array[Float], k: Int,
+                         idCol: String, vecCol: String): DataFrame =
+    cands.select(col(idCol),
+        round(VectorOps.cosine(col(vecCol), typedlit(queryVec)), 6).as("cos_sim"))
       .orderBy(desc("cos_sim"), asc(idCol))
       .limit(k)
+
+  /** The rows of `table`'s probed buckets — a bucket-pruned IN() on the
+    * storage `key` — minus every id a co-keyed tombstone table shadows.
+    * With `tombTableOpt` set, both sides prune to the SAME probed buckets
+    * (the reason [[deleteStagedIvf]]/[[deleteStagedLsh]] co-key them) and a
+    * broadcast anti-join drops deleted rows: deletes are visible the moment
+    * the tombstone lands, long before [[Bucketing.compactDeletes]] applies
+    * them. Without it, the read is the plain pruned scan.
+    */
+  private def probedRows(spark: SparkSession, table: String, key: String,
+                         probes: Seq[Long], idCol: String,
+                         tombTableOpt: Option[String]): DataFrame = {
+    val rows = Bucketing.read(spark, table).filter(col(key).isin(probes: _*))
+    tombTableOpt.fold(rows) { tt =>
+      val tomb = Bucketing.read(spark, tt)
+        .filter(col(key).isin(probes: _*))
+        .select(col(idCol))
+      rows.join(broadcast(tomb), Seq(idCol), "left_anti")
+    }
   }
+
+  /** The query code plus its `planes` one-bit flips: the Hamming-≤1 ball
+    * a staged LSH probe reads.
+    */
+  private def hammingBall1(qcode: Long, planes: Int): Seq[Long] =
+    qcode +: (0 until planes).map(b => qcode ^ (1L << b))
 
   /** Stage an embedding corpus as a bucketed catalog table keyed by its LSH
     * code — the SERVING path for single-query lookups. [[lshTopK]] is the
@@ -476,48 +585,22 @@ object Similarity {
       withLshCode(batch, vecCol, planes).select(col(idCol), col("lsh_code")),
       tombTable, "lsh_code", buckets)
 
-  /** Probe a tombstone-carrying staged LSH index: both sides prune to the
-    * Hamming-≤1 probe-code buckets, the anti-join shadows deleted rows —
-    * deletes are visible the moment the tombstone lands, before any
-    * compaction ([[probeStagedIvfDeletes]]'s contract on the code-keyed
-    * arm).
-    */
-  def probeStagedLshDeletes(spark: SparkSession, table: String,
-                            tombTable: String, queryVec: Array[Float],
-                            qcode: Long, planes: Int = lshPlanes, k: Int = 10,
-                            idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    val probes = qcode +: (0 until planes).map(b => qcode ^ (1L << b))
-    val tomb = Bucketing.read(spark, tombTable)
-      .filter(col("lsh_code").isin(probes: _*))
-      .select(col(idCol))
-    Bucketing.read(spark, table)
-      .filter(col("lsh_code").isin(probes: _*))
-      .join(broadcast(tomb), Seq(idCol), "left_anti")
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), typedlit(queryVec)), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
-  }
-
   /** Probe a [[stageLshBucketed]] table: candidates = rows whose code is
     * within Hamming distance 1 of the query's code, fetched via the literal
     * probe-code list (bucket-pruned scan); exact cosine re-ranks survivors.
     * The query vector and its code are plain VALUES, not a frame — in a
     * serving path they come from the application, so no corpus scan precedes
-    * the probe.
+    * the probe. `tombTableOpt`: a [[deleteStagedLsh]] tombstone table whose
+    * ids are shadowed from the answer ([[probedRows]]).
     */
   def probeStagedLsh(spark: SparkSession, table: String, queryVec: Array[Float],
                      qcode: Long, planes: Int = lshPlanes, k: Int = 10,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val probes = qcode +: (0 until planes).map(b => qcode ^ (1L << b))
-    Bucketing.read(spark, table)
-      .filter(col("lsh_code").isin(probes: _*))
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), typedlit(queryVec)), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
-  }
+                     idCol: String = "vec_id", vecCol: String = "embedding",
+                     tombTableOpt: Option[String] = None): DataFrame =
+    cosineTopK(
+      probedRows(spark, table, "lsh_code", hammingBall1(qcode, planes), idCol,
+        tombTableOpt),
+      queryVec, k, idCol, vecCol)
 
   /** FILTERED probe of a payload-carrying [[stageLshBucketed]] table:
     * predicate + vector search in one lookup — "nearest neighbors AMONG
@@ -549,18 +632,13 @@ object Similarity {
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
     require(ham >= 1 && ham <= 2, s"probe ball must be 1 or 2, got $ham")
-    val one = (0 until planes).map(b => qcode ^ (1L << b))
     val two = if (ham < 2) Seq.empty else for {
       i <- 0 until planes; j <- (i + 1) until planes
     } yield qcode ^ (1L << i) ^ (1L << j)
-    val probes = (qcode +: one) ++ two
-    Bucketing.read(spark, table)
-      .filter(col("lsh_code").isin(probes: _*))
-      .filter(pred)
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), typedlit(queryVec)), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
+    cosineTopK(
+      probedRows(spark, table, "lsh_code", hammingBall1(qcode, planes) ++ two,
+        idCol, None).filter(pred),
+      queryVec, k, idCol, vecCol)
   }
 
   /** Probe a [[stageLshBucketed]] table for a BATCH of query vectors — the
@@ -580,9 +658,7 @@ object Similarity {
                           vecCol: String = "embedding"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     import spark.implicits._
-    val allProbes = queries
-      .flatMap { case (_, _, c) => c +: (0 until planes).map(b => c ^ (1L << b)) }
-      .distinct
+    val allProbes = queries.flatMap { case (_, _, c) => hammingBall1(c, planes) }.distinct
     val qdf = queries.toDF("query_id", "qv", "qcode")
     val w = Window.partitionBy("query_id").orderBy(desc("cos_sim"), asc("cand_id"))
     Bucketing.read(spark, table)
@@ -681,17 +757,15 @@ object Similarity {
 
   /** Probe a [[stageIvfBucketed]] table: read only the `probeCids` inverted
     * lists (bucket-pruned IN() on the storage key), exact cosine top-k on
-    * the survivors.
+    * the survivors. `tombTableOpt`: a [[deleteStagedIvf]] tombstone table
+    * whose ids are shadowed from the answer ([[probedRows]]).
     */
   def probeStagedIvf(spark: SparkSession, table: String, queryVec: Array[Float],
                      probeCids: Seq[Long], k: Int = 10,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    Bucketing.read(spark, table)
-      .filter(col("cid").isin(probeCids: _*))
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), typedlit(queryVec)), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
+                     idCol: String = "vec_id", vecCol: String = "embedding",
+                     tombTableOpt: Option[String] = None): DataFrame =
+    cosineTopK(probedRows(spark, table, "cid", probeCids, idCol, tombTableOpt),
+      queryVec, k, idCol, vecCol)
 
   /** Routing groups for [[assignTwoLevel]]: √kc super-lists balances the
     * two levels' work (g + kc/g minimized at g = √kc).
@@ -798,28 +872,6 @@ object Similarity {
       assigned.select(col(idCol), col("cid")), tombTable, "cid", buckets)
   }
 
-  /** Probe a tombstone-carrying staged IVF index: both the lists and the
-    * tombstones prune to the SAME probed `cid` buckets (the reason
-    * [[deleteStagedIvf]] co-keys them), the anti-join shadows deleted rows,
-    * exact cosine ranks the survivors — deletes are visible to serving the
-    * moment the tombstone lands, long before compaction applies them.
-    */
-  def probeStagedIvfDeletes(spark: SparkSession, table: String, tombTable: String,
-                            queryVec: Array[Float], probeCids: Seq[Long],
-                            k: Int = 10, idCol: String = "vec_id",
-                            vecCol: String = "embedding"): DataFrame = {
-    val tomb = Bucketing.read(spark, tombTable)
-      .filter(col("cid").isin(probeCids: _*))
-      .select(col(idCol))
-    Bucketing.read(spark, table)
-      .filter(col("cid").isin(probeCids: _*))
-      .join(broadcast(tomb), Seq(idCol), "left_anti")
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), typedlit(queryVec)), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
-  }
-
   /** Probe a [[stageIvfBucketed]] table for a BATCH of query vectors — the
     * many-queries serving shape on the IVF arm (it existed only on the LSH
     * arm, whose single-query recall measures 0.1 on this corpus vs IVF's
@@ -869,13 +921,8 @@ object Similarity {
                              pred: org.apache.spark.sql.Column, k: Int = 10,
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame =
-    Bucketing.read(spark, table)
-      .filter(col("cid").isin(probeCids: _*))
-      .filter(pred)
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), typedlit(queryVec)), 6).as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc(idCol))
-      .limit(k)
+    cosineTopK(probedRows(spark, table, "cid", probeCids, idCol, None).filter(pred),
+      queryVec, k, idCol, vecCol)
 
   /** Product-quantization geometry: [[pqM]] subspaces of `dims/pqM`
     * components each, [[pqK]] codewords per subspace. At these defaults a
@@ -1108,8 +1155,7 @@ object Similarity {
                 nOpt: Option[Long] = None,
                 cbOpt: Option[DataFrame] = None): DataFrame = {
     val centroidsN = centroidsNOpt.getOrElse(centroidsFor(nOpt.getOrElse(emb.count())))
-    val cent = emb.filter(col(idCol) < centroidsN)
-      .select(col(idCol).as("cid"), col(vecCol).as("ce"))
+    val cent = standInCentroids(emb, centroidsN, idCol, vecCol)
     // residual encoding (r12 verdict item 2): rank by
     //   dot(q, v) ≈ dot(q, ce_cid) + Σ_j lut[j, code_j]
     // where the codes quantize v − ce_cid against the residual codebook —
@@ -1240,10 +1286,6 @@ object Similarity {
     (nMissing, dups)
   }
 
-  /** (id, cid, codes) rows for the staged IVF-PQ layout: broadcast-argmax
-    * list assignment + PQ codes packed into an ascending-j array (the fixed
-    * order [[probeStagedIvfPq]]'s ADC sum relies on).
-    */
   /** Driver-collected PQ codebook in (ascending j, ascending k) order — the
     * input shape of the [[graft.expressions.PqNearestCodes]] /
     * [[graft.expressions.PqAdcScore]] kernels. Bounded by construction
@@ -1345,9 +1387,13 @@ object Similarity {
     }.take(nprobe).map(_._1)
   }
 
+  /** (id, cid, codes) rows for the staged IVF-PQ layout: broadcast-argmax
+    * list assignment + PQ codes packed into an ascending-j array (the fixed
+    * order [[probeStagedIvfPq]]'s ADC sum relies on).
+    */
   private def ivfPqRows(emb: DataFrame, cent: DataFrame, codebook: DataFrame,
                         idCol: String, vecCol: String,
-                        centroidsN: Int = ivfCentroids): DataFrame = {
+                        centroidsN: Int): DataFrame = {
     // `codebook` is the RESIDUAL codebook ([[pqCodebookResidual]], built on
     // the staged corpus and pinned across appends); the stored codes
     // quantize v − ce(cid), matching [[ivfPqTopK]]'s ranking decomposition.
@@ -1365,12 +1411,12 @@ object Similarity {
     * from the stored codes against the query's broadcast M×K lookup table —
     * no float corpus vector is touched after staging. `emb` supplies only
     * the query row and the (bounded, deterministic) codebook.
-    */
-  /** `tombTableOpt`: a [[deleteStagedIvf]]-shaped tombstone table to shadow
+    *
+    * `tombTableOpt`: a [[deleteStagedIvf]]-shaped tombstone table to shadow
     * — both sides prune to the probed `cid` buckets and deleted rows
-    * vanish from the ADC ranking the moment the tombstone lands, exactly
-    * like [[probeStagedIvfDeletes]] on the plain arm (r16: the IVF-PQ code
-    * table takes deletion requests too — a GDPR erasure against it no
+    * vanish from the ADC ranking the moment the tombstone lands, through
+    * the same [[probedRows]] read as [[probeStagedIvf]] (r16: the IVF-PQ
+    * code table takes deletion requests too — a GDPR erasure against it no
     * longer means a full restage).
     *
     * `centArtOpt` MUST be the PREFIX artifact (cid == corpus vec_id — the
@@ -1401,15 +1447,10 @@ object Similarity {
     // [→ broadcast anti-join] → project → TakeOrdered — the replaced shape
     // paid a posexplode (rows ×M), two broadcast joins and a groupBy
     // exchange per probe.
-    val (cids, cvecs) = centArtOpt.getOrElse {
-      collectCent(emb.filter(col(idCol) < centroidsN)
-        .select(col(idCol).as("cid"), col(vecCol).as("ce")))
-    }
-    val (ks, cws) = cbArtOpt.getOrElse {
-      val cent = emb.filter(col(idCol) < centroidsN)
-        .select(col(idCol).as("cid"), col(vecCol).as("ce"))
-      collectCodebook(pqCodebookResidual(emb, cent, idCol, vecCol, centroidsN))
-    }
+    val cent = standInCentroids(emb, centroidsN, idCol, vecCol)
+    val (cids, cvecs) = centArtOpt.getOrElse(collectCent(cent))
+    val (ks, cws) = cbArtOpt.getOrElse(
+      collectCodebook(pqCodebookResidual(emb, cent, idCol, vecCol, centroidsN)))
     // the declared probes' query rows live inside the collected prefix;
     // fall back to the corpus scan only for foreign query ids
     val qe =
@@ -1426,16 +1467,7 @@ object Similarity {
         typedlit(probeCids.sorted),
         typedlit(probeCids.sorted.map(qce))),
       col("cid"))
-    val live = tombTableOpt.fold(
-        Bucketing.read(spark, table).filter(col("cid").isin(probeCids: _*))) { tt =>
-      val tomb = Bucketing.read(spark, tt)
-        .filter(col("cid").isin(probeCids: _*))
-        .select(col(idCol))
-      Bucketing.read(spark, table)
-        .filter(col("cid").isin(probeCids: _*))
-        .join(broadcast(tomb), Seq(idCol), "left_anti")
-    }
-    live
+    probedRows(spark, table, "cid", probeCids, idCol, tombTableOpt)
       .select(col(idCol),
         round(adcScoreCol(col("codes"), ks, ips) + qceOf, 6).as("adc"))
       .orderBy(desc("adc"), asc(idCol))
@@ -1585,6 +1617,39 @@ object Similarity {
         .stripMargin.replaceAll("\n", "")
     }.mkString("[", ", ", "]")
 
+  /** SemDeDup-style semantic near-dup pairs: candidates are scoped by IVF
+    * CLUSTER membership (cosine-nearest centroid, the [[ivfTopK]] assignment)
+    * instead of [[nearDupPairs]]'s LSH code-ball — the "cluster then compare
+    * within cluster" shape of semantic-dedup pipelines, which catches
+    * paraphrase-level duplicates whose codes differ in >1 bit. Pairwise work
+    * is per-cluster: with [[centroidsFor]]-scaled cluster count the expected
+    * list size stays ~constant as the corpus grows, so the self-join is an
+    * equi-join on `cid` whose per-key fan-out is bounded by design (a skewed
+    * cluster is the same lever as a hot band bucket — cap or re-train).
+    * Output: (cid, v1, v2, cos_sim) with v1 < v2 and cos_sim ≥ threshold.
+    */
+  def semanticNearDupPairs(emb: DataFrame, threshold: Double,
+                           centroidsNOpt: Option[Int] = None,
+                           idCol: String = "vec_id", vecCol: String = "embedding",
+                           nOpt: Option[Long] = None): DataFrame = {
+    val centroidsN = centroidsNOpt.getOrElse(centroidsFor(nOpt.getOrElse(emb.count())))
+    val cent = standInCentroids(emb, centroidsN, idCol, vecCol)
+    val assigned = emb.crossJoin(broadcast(cent))
+      .select(col(idCol), col("cid"), VectorOps.cosine(col(vecCol), col("ce")).as("ccos"))
+      .groupBy(idCol)
+      .agg(max_by(col("cid"), struct(col("ccos"), (-col("cid")).as("tie"))).as("cid"))
+    val tagged = emb.join(assigned, idCol)
+      .withColumn("nrm", VectorOps.norm(col(vecCol)))
+    val a = tagged.select(col("cid"), col(idCol).as("v1"), col(vecCol).as("e1"), col("nrm").as("n1"))
+    val b = tagged.select(col("cid"), col(idCol).as("v2"), col(vecCol).as("e2"), col("nrm").as("n2"))
+    a.join(b, "cid").filter(col("v1") < col("v2"))
+      .select(col("cid"), col("v1"), col("v2"),
+        round(when(col("n1") === 0 || col("n2") === 0, lit(0.0))
+          .otherwise(VectorOps.dot(col("e1"), col("e2")) / (col("n1") * col("n2"))), 6)
+          .as("cos_sim"))
+      .filter(col("cos_sim") >= threshold)
+  }
+
   /** Embedding near-duplicate pairs: codes within Hamming distance 1,
     * verified by exact cosine threshold.
     *
@@ -1602,40 +1667,6 @@ object Similarity {
     * would trade two parallel parquet scans for a full shuffle of the
     * vectors, a bad trade at any scale.
     */
-  /** SemDeDup-style semantic near-dup pairs: candidates are scoped by IVF
-    * CLUSTER membership (cosine-nearest centroid, the [[ivfTopK]] assignment)
-    * instead of [[nearDupPairs]]'s LSH code-ball — the "cluster then compare
-    * within cluster" shape of semantic-dedup pipelines, which catches
-    * paraphrase-level duplicates whose codes differ in >1 bit. Pairwise work
-    * is per-cluster: with [[centroidsFor]]-scaled cluster count the expected
-    * list size stays ~constant as the corpus grows, so the self-join is an
-    * equi-join on `cid` whose per-key fan-out is bounded by design (a skewed
-    * cluster is the same lever as a hot band bucket — cap or re-train).
-    * Output: (cid, v1, v2, cos_sim) with v1 < v2 and cos_sim ≥ threshold.
-    */
-  def semanticNearDupPairs(emb: DataFrame, threshold: Double,
-                           centroidsNOpt: Option[Int] = None,
-                           idCol: String = "vec_id", vecCol: String = "embedding",
-                           nOpt: Option[Long] = None): DataFrame = {
-    val centroidsN = centroidsNOpt.getOrElse(centroidsFor(nOpt.getOrElse(emb.count())))
-    val cent = emb.filter(col(idCol) < centroidsN)
-      .select(col(idCol).as("cid"), col(vecCol).as("ce"))
-    val assigned = emb.crossJoin(broadcast(cent))
-      .select(col(idCol), col("cid"), VectorOps.cosine(col(vecCol), col("ce")).as("ccos"))
-      .groupBy(idCol)
-      .agg(max_by(col("cid"), struct(col("ccos"), (-col("cid")).as("tie"))).as("cid"))
-    val tagged = emb.join(assigned, idCol)
-      .withColumn("nrm", VectorOps.norm(col(vecCol)))
-    val a = tagged.select(col("cid"), col(idCol).as("v1"), col(vecCol).as("e1"), col("nrm").as("n1"))
-    val b = tagged.select(col("cid"), col(idCol).as("v2"), col(vecCol).as("e2"), col("nrm").as("n2"))
-    a.join(b, "cid").filter(col("v1") < col("v2"))
-      .select(col("cid"), col("v1"), col("v2"),
-        round(when(col("n1") === 0 || col("n2") === 0, lit(0.0))
-          .otherwise(VectorOps.dot(col("e1"), col("e2")) / (col("n1") * col("n2"))), 6)
-          .as("cos_sim"))
-      .filter(col("cos_sim") >= threshold)
-  }
-
   def nearDupPairs(emb: DataFrame, threshold: Double,
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    planesOpt: Option[Int] = None,

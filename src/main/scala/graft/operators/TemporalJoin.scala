@@ -137,18 +137,6 @@ object TemporalJoin {
         payload.map(p => col("__m").getField(p).as(p))): _*)
   }
 
-  /** Inner range join: pairs (l, r) sharing `keys` with
-    * `r[rightUsCol] ∈ (l[leftUsCol] + lowUs, l[leftUsCol] + highUs]`
-    * (half-open: strictly after the low edge, closed at the high edge).
-    * Timestamps are integer microseconds so the comparison is exact — no
-    * sub-second truncation hazard.
-    *
-    * Buckets are `(highUs - lowUs)` wide: an interval of that length spans
-    * at most 2 bucket boundaries, so each left row expands to ≤ 2 candidate
-    * buckets and each true pair is produced exactly once (a right row lives
-    * in exactly one bucket). Equality keys keep the join a hash join; the
-    * exact range predicate re-checks after the bucket match.
-    */
   /** Inner interval-overlap join: pairs sharing `keys` whose HALF-OPEN
     * intervals `[lStart, lEnd)` and `[rStart, rEnd)` intersect
     * (`lStart < rEnd && rStart < lEnd`). Column values are integer
@@ -183,6 +171,18 @@ object TemporalJoin {
       .drop("__b")
   }
 
+  /** Inner range join: pairs (l, r) sharing `keys` with
+    * `r[rightUsCol] ∈ (l[leftUsCol] + lowUs, l[leftUsCol] + highUs]`
+    * (half-open: strictly after the low edge, closed at the high edge).
+    * Timestamps are integer microseconds so the comparison is exact — no
+    * sub-second truncation hazard.
+    *
+    * Buckets are `(highUs - lowUs)` wide: an interval of that length spans
+    * at most 2 bucket boundaries, so each left row expands to ≤ 2 candidate
+    * buckets and each true pair is produced exactly once (a right row lives
+    * in exactly one bucket). Equality keys keep the join a hash join; the
+    * exact range predicate re-checks after the bucket match.
+    */
   def rangeJoinBucketed(left: DataFrame, right: DataFrame, keys: Seq[String],
                         leftUsCol: String, rightUsCol: String,
                         lowUs: Long, highUs: Long): DataFrame = {

@@ -2527,21 +2527,6 @@ object CoreQueries {
       .orderBy("nation")
   }
 
-  /** Q106 — seasonal-naive forecast backtest: forecast each day's event
-    * count per type as the count 7 OBSERVED days earlier (the weekly-naive
-    * baseline every capacity forecast must beat before it earns a model),
-    * scored over every day with a predecessor — per type, the scored-day
-    * count, total/mean absolute error, and MAPE. Absolute errors are
-    * integers (exact BIGINT sum); the per-day percentage errors are the
-    * one float step, rounded at scale 9 into an exact DECIMAL sum before
-    * the single output division (the q100/classifier discipline).
-    *
-    * Scale: the q102 shape — one exchange-free rollup off the
-    * [[EventsBackbone.byType]] staged scan, then a row-lag window on the
-    * calendar-bounded daily aggregate. Row-lag (7 observed days), not a
-    * calendar join: on a gapped series the q65 gap audit is the guard;
-    * the backtest semantics stay deterministic either way.
-    */
   /** `q107_dpp` — dynamic partition pruning through the star layout: the
     * day-partitioned events fact ([[EventsBackbone.dayPartitioned]]) joined
     * to its calendar dimension filtered to weekends. The weekend day-set is
@@ -2665,6 +2650,21 @@ object CoreQueries {
       .orderBy("day")
   }
 
+  /** Q106 — seasonal-naive forecast backtest: forecast each day's event
+    * count per type as the count 7 OBSERVED days earlier (the weekly-naive
+    * baseline every capacity forecast must beat before it earns a model),
+    * scored over every day with a predecessor — per type, the scored-day
+    * count, total/mean absolute error, and MAPE. Absolute errors are
+    * integers (exact BIGINT sum); the per-day percentage errors are the
+    * one float step, rounded at scale 9 into an exact DECIMAL sum before
+    * the single output division (the q100/classifier discipline).
+    *
+    * Scale: the q102 shape — one exchange-free rollup off the
+    * [[EventsBackbone.byType]] staged scan, then a row-lag window on the
+    * calendar-bounded daily aggregate. Row-lag (7 observed days), not a
+    * calendar join: on a gapped series the q65 gap audit is the guard;
+    * the backtest semantics stay deterministic either way.
+    */
   def q106(s: SparkSession, dir: String): DataFrame = {
     val daily = EventsBackbone.byType(s, dir)
       .groupBy(col("event_type"), to_date(col("ts")).as("day"))

@@ -167,17 +167,6 @@ object CurationQueries {
 
   val curriculumPhases = 4
 
-  /** Curriculum phasing (`mix_curriculum`): order each source's docs from
-    * easiest to hardest by mean unigram log-probability under the corpus LM
-    * (the text_lm_score signal, corpus-wide) and cut into equal-depth
-    * phases — the "train on easy data first, balanced per source" ordering
-    * step. Per-SOURCE ntile windows (never a global sort); per-doc scores
-    * are 6-rounded BEFORE the ordering so phase boundaries are
-    * engine-deterministic; output is the bounded per-(source, phase)
-    * summary. At 100 TB the same phase column comes from broadcast quantile
-    * cuts (the q55 machinery) instead of ntile; the equal-depth semantics
-    * here are the spec of that.
-    */
   /** Dedup-aware effective corpus size: each doc weighted 1/|its near-dup
     * cluster| (cluster-free docs weigh 1), rolled up per source — the
     * honest "how much UNIQUE data does this source really contribute"
@@ -205,6 +194,17 @@ object CurationQueries {
       .orderBy("source")
   }
 
+  /** Curriculum phasing (`mix_curriculum`): order each source's docs from
+    * easiest to hardest by mean unigram log-probability under the corpus LM
+    * (the text_lm_score signal, corpus-wide) and cut into equal-depth
+    * phases — the "train on easy data first, balanced per source" ordering
+    * step. Per-SOURCE ntile windows (never a global sort); per-doc scores
+    * are 6-rounded BEFORE the ordering so phase boundaries are
+    * engine-deterministic; output is the bounded per-(source, phase)
+    * summary. At 100 TB the same phase column comes from broadcast quantile
+    * cuts (the q55 machinery) instead of ntile; the equal-depth semantics
+    * here are the spec of that.
+    */
   def mixCurriculum(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val docs = Tables.documents(s, dir)
@@ -422,20 +422,6 @@ object CurationQueries {
         seqLen, chunkWidth = shardChunkWidth)
       .orderBy("doc_id", "seq")
 
-  /** `pipeline_mm_dump` — the MULTIMODAL training dump (r13 verdict item 3):
-    * [[pipelineDump]]'s packed context windows with each curated doc's
-    * media columns riding along — kind + payload checksum through the
-    * decode layer ([[MultimodalQueries.mediaCatalog]]) and the embedding's
-    * width + squared norm from the cross-modal link — i.e. what a real
-    * dump ships so the trainer can route modalities and detect payload
-    * drift without re-reading media bytes. Composition law (spec-pinned
-    * AND oracled): the row set is EXACTLY `pipeline_dump ⋈ media catalog
-    * ⟕ embeddings` — the media columns change no window, drop no doc, and
-    * the curated∩train doc set is byte-identical to the text-only dump's.
-    * Scale shape: the dump's own stages plus two keyed joins (catalog
-    * derived scan-locally from the payload bytes; embeddings equi-joined
-    * on id) — both partition-parallel, nothing new driver-side.
-    */
   /** The text dump's DuckDB CTE chain (curate → split → train slice →
     * packed windows) ending in the `dump` CTE — `pipeline_dump` selects it
     * directly, `pipeline_mm_dump` joins the media columns onto it; one
@@ -461,6 +447,20 @@ object CurationQueries {
        |   unnest(range(CAST((cum - toks) // $seqLen AS BIGINT), CAST(((cum - 1) // $seqLen) + 1 AS BIGINT))) AS seq
        |  FROM c) t)""".stripMargin
 
+  /** `pipeline_mm_dump` — the MULTIMODAL training dump (r13 verdict item 3):
+    * [[pipelineDump]]'s packed context windows with each curated doc's
+    * media columns riding along — kind + payload checksum through the
+    * decode layer ([[MultimodalQueries.mediaCatalog]]) and the embedding's
+    * width + squared norm from the cross-modal link — i.e. what a real
+    * dump ships so the trainer can route modalities and detect payload
+    * drift without re-reading media bytes. Composition law (spec-pinned
+    * AND oracled): the row set is EXACTLY `pipeline_dump ⋈ media catalog
+    * ⟕ embeddings` — the media columns change no window, drop no doc, and
+    * the curated∩train doc set is byte-identical to the text-only dump's.
+    * Scale shape: the dump's own stages plus two keyed joins (catalog
+    * derived scan-locally from the payload bytes; embeddings equi-joined
+    * on id) — both partition-parallel, nothing new driver-side.
+    */
   def pipelineMmDump(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id").as("doc_id"),
@@ -609,37 +609,6 @@ object CurationQueries {
       build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
   }
 
-  /** `curate_classifier` — train the cheap linear twin of the rule gate ON
-    * the cluster: class-balanced batch gradient descent for logistic
-    * regression (6 iterations, lr 4), distilling the conjunctive Gopher
-    * gate into one dot product — the model-based quality filter every
-    * large-scale pipeline ends up wanting, with the training loop itself
-    * distributed (each iteration = one partial-aggregable gradient scan +
-    * one accuracy scan over the cached feature frame; driver traffic is 5
-    * weights per round).
-    *
-    * ENGINE-EXACT BY CONSTRUCTION (r12): every quantity in the descent is
-    * a scaled integer — features at scale 9, weights at scale 6, the
-    * rational sigmoid `p = 0.5 + z/(2(1+|z|))` evaluated as one half-up
-    * integer division (through a 128-bit DECIMAL(38,0)/HUGEINT carrier
-    * where the product exceeds 2⁶³), gradient contributions rounded
-    * half-away at scale 9 via sign·divHalfUp, gradient SUMS exact integer
-    * sums (order-free), and the weight update computed in BigInt on the
-    * driver with the same half-away rule the oracle's CTE applies. There
-    * is NO floating-point operation anywhere between the raw counts and
-    * the final display cast, so any engine with exact 128-bit integer
-    * arithmetic reproduces the trajectory bit-for-bit — the r11 driver
-    * red row proved cross-engine IEEE-double agreement is NOT a safe
-    * assumption (`round(double, 9)` / FMA differences), so no double
-    * survives in this chain. The one display step, `w6 → w6/1e6` as a
-    * DOUBLE, is a single IEEE division of two exactly-representable
-    * operands — correctly rounded, deterministic everywhere.
-    *
-    * Magnitude budget (spec-asserted): |x9| ≤ 5e9 (mwl/10 < 5), |w6| ≤ 1e8
-    * ⇒ |z15| ≤ 5·1e8·5e9+1e17 < 9.2e18 (long); sigmoid numerator ≤ 5e26
-    * and per-feature gradient product ≤ ~1e30 (128-bit); per-row g9 ≤ 5e12
-    * and its sum over ≤1e6 rows ≤ 5e18 — summed as DECIMAL(38,0) anyway.
-    */
   /** z at scale 15 for driver-held scale-6 weights: `wb6·1e9 + Σ wj6·xj9`.
     * Pure long arithmetic — exact, hence association-free.
     */
@@ -746,6 +715,37 @@ object CurationQueries {
     BackboneRegistry.scalarOrBuild(s, s"clf:descend:$dir")(
       descend(clfFeatures(s, dir)))
 
+  /** `curate_classifier` — train the cheap linear twin of the rule gate ON
+    * the cluster: class-balanced batch gradient descent for logistic
+    * regression (6 iterations, lr 4), distilling the conjunctive Gopher
+    * gate into one dot product — the model-based quality filter every
+    * large-scale pipeline ends up wanting, with the training loop itself
+    * distributed (each iteration = one partial-aggregable gradient scan +
+    * one accuracy scan over the cached feature frame; driver traffic is 5
+    * weights per round).
+    *
+    * ENGINE-EXACT BY CONSTRUCTION (r12): every quantity in the descent is
+    * a scaled integer — features at scale 9, weights at scale 6, the
+    * rational sigmoid `p = 0.5 + z/(2(1+|z|))` evaluated as one half-up
+    * integer division (through a 128-bit DECIMAL(38,0)/HUGEINT carrier
+    * where the product exceeds 2⁶³), gradient contributions rounded
+    * half-away at scale 9 via sign·divHalfUp, gradient SUMS exact integer
+    * sums (order-free), and the weight update computed in BigInt on the
+    * driver with the same half-away rule the oracle's CTE applies. There
+    * is NO floating-point operation anywhere between the raw counts and
+    * the final display cast, so any engine with exact 128-bit integer
+    * arithmetic reproduces the trajectory bit-for-bit — an r11 oracle
+    * mismatch proved cross-engine IEEE-double agreement is NOT a safe
+    * assumption (`round(double, 9)` / FMA differences), so no double
+    * survives in this chain. The one display step, `w6 → w6/1e6` as a
+    * DOUBLE, is a single IEEE division of two exactly-representable
+    * operands — correctly rounded, deterministic everywhere.
+    *
+    * Magnitude budget (spec-asserted): |x9| ≤ 5e9 (mwl/10 < 5), |w6| ≤ 1e8
+    * ⇒ |z15| ≤ 5·1e8·5e9+1e17 < 9.2e18 (long); sigmoid numerator ≤ 5e26
+    * and per-feature gradient product ≤ ~1e30 (128-bit); per-row g9 ≤ 5e12
+    * and its sum over ≤1e6 rows ≤ 5e18 — summed as DECIMAL(38,0) anyway.
+    */
   def classifier(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (trajectory, _) = descendFull(s, dir)

@@ -145,10 +145,8 @@ object MultimodalQueries {
       val t = s"graft_mm_ann_k${kc}_$tag"
       Staged(Seq(t), s"mm_ann:k$kc:pl_kind:v2") {
         val me = mediaEmb(s, dir)
-        val cent = me.filter(col("vec_id") < kc)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-        Similarity.stageIvfBucketed(me, cent, t, buckets = kc,
-          payloadCols = Seq("kind"))
+        Similarity.stageIvfBucketed(me, Similarity.standInCentroids(me, kc), t,
+          buckets = kc, payloadCols = Seq("kind"))
       }
     }.head
 
@@ -191,21 +189,10 @@ object MultimodalQueries {
     * arm.
     */
   def searchRecall(s: SparkSession, dir: String): DataFrame = {
-    val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qe"))
-    val exact = mediaEmb(s, dir)
-      .filter(col("kind") === searchKind && col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(graft.functions.VectorOps.cosine(col("embedding"), col("qe")), 6)
-          .as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-      .limit(searchK)
-      .select("vec_id")
-    exact.join(search(s, dir).select("vec_id"), "vec_id")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(searchK).as("k"), col("hits"),
-        round(col("hits") / lit(searchK.toDouble), 6).as("recall"))
+    val exact = Similarity.exactTopK(
+      mediaEmb(s, dir).filter(col("kind") === searchKind && col("vec_id") =!= 0),
+      Similarity.queryRow(Tables.embeddings(s, dir), 0L), searchK)
+    Similarity.recallAt(exact, search(s, dir), searchK)
   }
 
   /** Per-FRAME pseudo-embedding (8 dims) from a frame checksum — the
@@ -235,12 +222,6 @@ object MultimodalQueries {
         frameVec(col("frame_checksum")).as("fv"))
   }
 
-  /** The probe-selection PREFIX of [[frameEmb]]: frames of the centroid-
-    * prefix payloads only (which include the query payload 0) — decoding
-    * ≤ 16 records instead of the corpus, for the same pushdown-barrier
-    * reason as [[mediaEmbPrefix]]. Kind is irrelevant to probe selection,
-    * so the decode-kind join drops too.
-    */
   /** Driver-collected media-prefix centroid artifact (pooled arm), cached
     * per (session, dir) like the sim family's prefix artifact — the kc
     * decoded prefix rows the staged media lists were built from. Probe
@@ -249,8 +230,8 @@ object MultimodalQueries {
     */
   private def mmCentArt(s: SparkSession, dir: String): (Seq[Long], Seq[Seq[Float]]) =
     BackboneRegistry.scalarOrBuild(s, s"mmcentart:$dir") {
-      Similarity.collectCent(mediaEmbPrefix(s, dir)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce")))
+      Similarity.collectCent(Similarity.standInCentroids(mediaEmbPrefix(s, dir),
+        SimilarityQueries.adaptiveKc(s, dir)))
     }
 
   /** Driver-collected FRAME-prefix artifact (multi-vector arm): the
@@ -263,6 +244,12 @@ object MultimodalQueries {
         .toSeq.sortBy(t => (t._1, t._2))
     }
 
+  /** The probe-selection PREFIX of [[frameEmb]]: frames of the centroid-
+    * prefix payloads only (which include the query payload 0) — decoding
+    * ≤ 16 records instead of the corpus, for the same pushdown-barrier
+    * reason as [[mediaEmbPrefix]]. Kind is irrelevant to probe selection,
+    * so the decode-kind join drops too.
+    */
   private def frameEmbPrefix(s: SparkSession, dir: String): DataFrame =
     Media.sampleFrames(
         records(s, dir).filter(col("id") < SimilarityQueries.adaptiveKc(s, dir)),
@@ -284,8 +271,8 @@ object MultimodalQueries {
       Staged(Seq(t), s"mm_fann:k$kc:pl_kind:v2") {
         val fe = frameEmb(s, dir)
           .withColumn("fid", col("doc_id") * 4 + col("frame_idx"))
-        val cent = fe.filter(col("doc_id") < kc && col("frame_idx") === 0)
-          .select(col("doc_id").as("cid"), col("fv").as("ce"))
+        val cent = Similarity.standInCentroids(fe.filter(col("frame_idx") === 0), kc,
+          "doc_id", "fv")
         Similarity.stageIvfBucketed(fe, cent, t, buckets = kc, idCol = "fid",
           vecCol = "fv", payloadCols = Seq("doc_id", "frame_idx", "kind"))
       }
@@ -304,7 +291,6 @@ object MultimodalQueries {
     * and summed as DECIMAL (order-independent), exactly like `sim_maxsim`.
     */
   def searchMaxSim(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
     val t = mediaFrameAnnTable(s, dir)
     // per-query-frame top-[[searchNprobe]] lists, unioned — the same
     // selection the window formulation computed, now off the collected
@@ -319,19 +305,20 @@ object MultimodalQueries {
         Similarity.nearestCidsFor(qv.toArray, cids, cvecs, searchNprobe)
       }
       .distinct.sorted
-    val q = qFrames.toDF("qid", "qv")
-    Bucketing.read(s, t)
-      .filter(col("cid").isin(probeCids: _*))
-      .filter(col("kind") === searchKind && col("doc_id") =!= 0)
-      .join(broadcast(q))
-      .select(col("doc_id"), col("qid"),
-        graft.functions.VectorOps.dot(col("fv"), col("qv")).as("d"))
-      .groupBy("doc_id", "qid").agg(max(col("d")).as("mx"))
-      .groupBy("doc_id")
-      .agg(sum(round(col("mx"), 6).cast("decimal(18,6)")).as("sdec"))
-      .select(col("doc_id"), round(col("sdec").cast("double"), 6).as("maxsim"))
-      .orderBy(desc("maxsim"), asc("doc_id"))
-      .limit(searchK)
+    maxSimOf(s, dir, Bucketing.read(s, t).filter(col("cid").isin(probeCids: _*)))
+  }
+
+  /** MaxSim top-[[searchK]] of the kind-scoped payloads among `frames`
+    * against payload 0's frame set ([[Similarity.maxSimTopK]]) — the served
+    * arm passes its probed lists' frames, the exact truth every frame.
+    */
+  private def maxSimOf(s: SparkSession, dir: String, frames: DataFrame): DataFrame = {
+    import s.implicits._
+    val q = mmFrameArt(s, dir).filter(_._1 == 0L).map(t3 => (t3._2, t3._3))
+      .toDF("qid", "qv")
+    Similarity.maxSimTopK(
+      frames.filter(col("kind") === searchKind && col("doc_id") =!= 0),
+      q, searchK, "doc_id", "fv", "qv")
   }
 
   /** `mm_recall_maxsim` — the MaxSim arm's reading against the EXACT
@@ -341,27 +328,9 @@ object MultimodalQueries {
     * late-interaction ranking — a frame assigned to an unprobed list is
     * invisible to the approximate arm's max.
     */
-  def searchMaxSimRecall(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val fe = frameEmb(s, dir)
-    val q = mmFrameArt(s, dir).filter(_._1 == 0L).map(t3 => (t3._2, t3._3))
-      .toDF("qid", "qv")
-    val exact = fe.filter(col("kind") === searchKind && col("doc_id") =!= 0)
-      .join(broadcast(q))
-      .select(col("doc_id"), col("qid"),
-        graft.functions.VectorOps.dot(col("fv"), col("qv")).as("d"))
-      .groupBy("doc_id", "qid").agg(max(col("d")).as("mx"))
-      .groupBy("doc_id")
-      .agg(sum(round(col("mx"), 6).cast("decimal(18,6)")).as("sdec"))
-      .select(col("doc_id"), round(col("sdec").cast("double"), 6).as("maxsim"))
-      .orderBy(desc("maxsim"), asc("doc_id"))
-      .limit(searchK)
-      .select("doc_id")
-    exact.join(searchMaxSim(s, dir).select("doc_id"), "doc_id")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(searchK).as("k"), col("hits"),
-        round(col("hits") / lit(searchK.toDouble), 6).as("recall"))
-  }
+  def searchMaxSimRecall(s: SparkSession, dir: String): DataFrame =
+    Similarity.recallAt(maxSimOf(s, dir, frameEmb(s, dir)), searchMaxSim(s, dir),
+      searchK, idCol = "doc_id")
 
   /** Shared DuckDB CTE block for the media ANN arm: the decoded-kind
     * corpus, its centroid prefix, list assignment, the query row, and the

@@ -334,17 +334,6 @@ object RetrievalQueries {
       k1 = TextQueries.bm25K1, b = TextQueries.bm25B)
   }
 
-  /** `search_hybrid_staged` — the hybrid SERVING path (C43 is the fusion
-    * math over full-corpus arms; production serves both arms from their
-    * indexes): the lexical arm reads only [[lexTerms]]' postings buckets
-    * (C66's pruned probe), the dense arm reads only its 2 inverted lists
-    * of the ADAPTIVE staged index (r16 — the hybrid serving path rides the
-    * data-scaled arm, C201's flat probe line, not the fixed 16-list
-    * layout), each pools [[armDepth]] candidates, and RRF
-    * fuses the two bounded frames — the whole query touches index buckets,
-    * never the corpus. This is the RAG stack's retrieval shape: at 100 TB
-    * the arms are each a few buckets' I/O and the fusion is O(armDepth).
-    */
   /** `search_hybrid_agree` — the staged hybrid path's SERVING-QUALITY
     * reading (r16, verdict item 3): every ANN arm carries a recall number,
     * but the staged fusion had none — and it CAN legitimately drift from
@@ -377,6 +366,17 @@ object RetrievalQueries {
         col("disp_sum"), col("max_disp"))
   }
 
+  /** `search_hybrid_staged` — the hybrid SERVING path (C43 is the fusion
+    * math over full-corpus arms; production serves both arms from their
+    * indexes): the lexical arm reads only [[lexTerms]]' postings buckets
+    * (C66's pruned probe), the dense arm reads only its 2 inverted lists
+    * of the ADAPTIVE staged index (r16 — the hybrid serving path rides the
+    * data-scaled arm, C201's flat probe line, not the fixed 16-list
+    * layout), each pools [[armDepth]] candidates, and RRF
+    * fuses the two bounded frames — the whole query touches index buckets,
+    * never the corpus. This is the RAG stack's retrieval shape: at 100 TB
+    * the arms are each a few buckets' I/O and the fusion is O(armDepth).
+    */
   def hybridStaged(s: SparkSession, dir: String): DataFrame = {
     val bmTop = graft.operators.TextIndex.probeIndex(s, lexTable(s, dir),
         lexTerms, k = armDepth, k1 = TextQueries.bm25K1, b = TextQueries.bm25B)

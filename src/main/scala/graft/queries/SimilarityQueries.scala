@@ -32,9 +32,7 @@ object SimilarityQueries {
   private[queries] def centArtifact(s: SparkSession, dir: String,
                                     kc: Int): (Seq[Long], Seq[Seq[Float]]) =
     BackboneRegistry.scalarOrBuild(s, s"ivfcentart:$kc:$dir") {
-      Similarity.collectCent(Tables.embeddings(s, dir)
-        .filter(col("vec_id") < kc)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce")))
+      Similarity.collectCent(Similarity.standInCentroids(Tables.embeddings(s, dir), kc))
     }
 
   /** Driver-collected residual PQ codebook at list count `kc`, cached per
@@ -45,10 +43,8 @@ object SimilarityQueries {
       : (Seq[Seq[Long]], Seq[Seq[Seq[Double]]]) =
     BackboneRegistry.scalarOrBuild(s, s"pqcbart:$kc:$dir") {
       val emb = Tables.embeddings(s, dir)
-      val cent = emb.filter(col("vec_id") < kc)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
-      Similarity.collectCodebook(
-        Similarity.pqCodebookResidual(emb, cent, centroidsN = kc))
+      Similarity.collectCodebook(Similarity.pqCodebookResidual(emb,
+        Similarity.standInCentroids(emb, kc), centroidsN = kc))
     }
 
   /** Query vector `queryId` read from the prefix artifact (valid whenever
@@ -174,18 +170,6 @@ object SimilarityQueries {
     Similarity.ivfPqTopK(Tables.embeddings(s, dir), queryId = 0L, k = 10,
       nOpt = Some(embCount(s, dir)))
 
-  /** Top-10 by cosine in the random-projection-REDUCED space (64→16 dims,
-    * [[Similarity.withRandomProjection]]): the JL bandwidth/FLOP cut
-    * composed with the q19 broadcast-and-TakeOrdered search shape.
-    */
-  /** Label-centroid similarity matrix over mean-pooled embeddings
-    * ([[Similarity.meanPoolCentroids]]): pool each label's vectors into one
-    * centroid (exact decimal sums — partial-aggregable, engine-exact), then
-    * the pairwise cosine between the 10 centroids — the cluster-separation
-    * diagnostic (which classes overlap in embedding space) and the pooling
-    * primitive every chunk→doc embedding pipeline needs. The matrix join
-    * runs over one bounded row per label, broadcast.
-    */
   /** How many consecutive vec_ids form one multi-vector "document" for the
     * late-interaction query (the oracle SQL derives from this too).
     */
@@ -205,23 +189,23 @@ object SimilarityQueries {
     * summed as DECIMAL, so the cross-vector sum is order-independent.
     */
   def maxSim(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.functions.expr
     val v = Tables.embeddings(s, dir)
       .select(expr(s"vec_id div $maxSimGroup").as("doc"),
         col("vec_id"), col("embedding"))
     val q = v.filter(col("doc") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qe"))
-    v.filter(col("doc") =!= 0)
-      .join(broadcast(q))
-      .select(col("doc"), col("qid"),
-        graft.functions.VectorOps.dot(col("embedding"), col("qe")).as("d"))
-      .groupBy("doc", "qid").agg(max(col("d")).as("mx"))
-      .groupBy("doc").agg(sum(round(col("mx"), 6).cast("decimal(18,6)")).as("sdec"))
-      .select(col("doc"), round(col("sdec").cast("double"), 6).as("maxsim"))
-      .orderBy(desc("maxsim"), asc("doc"))
-      .limit(10)
+    Similarity.maxSimTopK(v.filter(col("doc") =!= 0), q, 10, "doc", "embedding", "qe")
   }
 
+  /** Label-centroid similarity matrix over mean-pooled embeddings
+    * ([[Similarity.meanPoolCentroids]]): pool each label's vectors into one
+    * centroid (exact decimal sums — partial-aggregable, engine-exact), then
+    * the pairwise cosine between the 10 centroids — the cluster-separation
+    * diagnostic (which classes overlap in embedding space) and the pooling
+    * primitive every chunk→doc embedding pipeline needs. The matrix join
+    * runs over one bounded row per label, broadcast.
+    */
   def poolMatrix(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val cent = Similarity.meanPoolCentroids(Tables.embeddings(s, dir))
@@ -295,16 +279,6 @@ object SimilarityQueries {
 
   val pcaRounds = 6
 
-  /** `sim_pca` — the corpus's top principal direction
-    * ([[graft.operators.Spectral.topComponent]]): one scan reduces the
-    * corpus to d² exact decimal Gram cells, then 6 rounds of scaled-integer
-    * power iteration on the driver (bounded by the embedding WIDTH, never
-    * the corpus) yield the leading loadings, eigenvalue, and
-    * explained-variance ratio — the anisotropy audit ([[dimProfile]] sees
-    * marginal spread per axis; this sees the dominant JOINT direction) run
-    * before whitening, dimension pruning, or diagnosing a vector store whose
-    * similarities are saturated by one direction.
-    */
   /** The collected Gram cells, once per (session, dir) — every spectral
     * consumer (top component, projection, deflation) derives from this one
     * scan's d² numbers.
@@ -331,6 +305,16 @@ object SimilarityQueries {
         pcaCells(s, dir), Similarity.dims, pcaRounds)
     }
 
+  /** `sim_pca` — the corpus's top principal direction
+    * ([[graft.operators.Spectral.topComponent]]): one scan reduces the
+    * corpus to d² exact decimal Gram cells, then 6 rounds of scaled-integer
+    * power iteration on the driver (bounded by the embedding WIDTH, never
+    * the corpus) yield the leading loadings, eigenvalue, and
+    * explained-variance ratio — the anisotropy audit ([[dimProfile]] sees
+    * marginal spread per axis; this sees the dominant JOINT direction) run
+    * before whitening, dimension pruning, or diagnosing a vector store whose
+    * similarities are saturated by one direction.
+    */
   def pca(s: SparkSession, dir: String): DataFrame = {
     val (v, lam6, evr6) = pcaModel(s, dir)
     graft.operators.Spectral.renderComponent(s, v, lam6, evr6).orderBy("dim")
@@ -418,6 +402,10 @@ object SimilarityQueries {
       .orderBy("label", "pred")
   }
 
+  /** Top-10 by cosine in the random-projection-REDUCED space (64→16 dims,
+    * [[Similarity.withRandomProjection]]): the JL bandwidth/FLOP cut
+    * composed with the q19 broadcast-and-TakeOrdered search shape.
+    */
   def rpTopK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val emb = Similarity.withRandomProjection(Tables.embeddings(s, dir))
@@ -433,24 +421,22 @@ object SimilarityQueries {
   /** Recall@k depth for the declared ANN-quality query. */
   val recallK = 10
 
-  /** Shared recall rollup: recall@[[recallK]] of `approx` (any served ANN
-    * arm's top-k, column `vec_id`) against the exact brute-force arm — ONE
-    * definition of both the ground-truth arm ([[Similarity.bruteForceTopK]],
-    * the same code q19 serves with) and the hits/recall aggregation, so the
-    * three declared recall rows cannot drift from each other or from the
+  /** The single-query truth: exact top-[[recallK]] of query 0 over the
+    * whole corpus, self included ([[Similarity.bruteForceTopK]], the same
+    * code q19 serves with).
+    */
+  private def exactTruth(s: SparkSession, dir: String): DataFrame =
+    Similarity.bruteForceTopK(Tables.embeddings(s, dir), queryId = 0L, k = recallK)
+
+  /** Recall@[[recallK]] of `approx` (any served single-query arm's top-k,
+    * column `vec_id`) against [[exactTruth]] through the one recall
+    * harness ([[Similarity.recallAt]]) — every single-query recall row
+    * reads through here, so none can drift from the others or from the
     * served exact path.
     */
   private def recallOf(s: SparkSession, dir: String,
-                       approx: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val exact = Similarity
-      .bruteForceTopK(Tables.embeddings(s, dir), queryId = 0L, k = recallK)
-      .select("vec_id")
-    exact.join(approx.select("vec_id"), "vec_id")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(recallK).as("k"), col("hits"),
-        round(col("hits") / lit(recallK.toDouble), 6).as("recall"))
-  }
+                       approx: DataFrame): DataFrame =
+    Similarity.recallAt(exactTruth(s, dir), approx, recallK)
 
   /** ANN quality measurement: recall@[[recallK]] of the approximate LSH arm
     * ([[lshTopK]]) against the exact brute-force cosine top-k — the
@@ -535,17 +521,11 @@ object SimilarityQueries {
     * [[rerankPool]] full-vector reads per query.
     */
   def pqRerank(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(s, dir)
     val cands = Similarity.pqTopK(emb, queryId = 0L, k = rerankPool)
       .select("vec_id")
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    emb.join(cands, "vec_id")
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(graft.functions.VectorOps.cosine(col("embedding"), col("qe")), 6)
-          .as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id")).limit(recallK)
+    Similarity.exactTopK(emb.join(cands, "vec_id"), Similarity.queryRow(emb, 0L),
+      recallK)
   }
 
   /** Recall@[[recallK]] of the re-ranked PQ arm — the C177 counterpart
@@ -569,10 +549,7 @@ object SimilarityQueries {
   def rerankRecallCurve(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(s, dir)
-    val exact = Similarity
-      .bruteForceTopK(emb, queryId = 0L, k = recallK)
-      .select("vec_id").localCheckpoint(true)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
+    val q = Similarity.queryRow(emb, 0L)
     // The ADC ranking is computed ONCE at the largest pool; a smaller pool's
     // candidate set is that ranking's prefix (identical deterministic
     // (adc DESC, vec_id) order), and the exact re-rank cosines are attached
@@ -591,14 +568,11 @@ object SimilarityQueries {
         round(graft.functions.VectorOps.cosine(col("embedding"), col("qe")), 6)
           .as("cos_sim"))
       .localCheckpoint(true)
-    rerankCurve.map { pool =>
-      val arm = pooled.filter(col("adc_rank") <= pool)
-        .orderBy(desc("cos_sim"), asc("vec_id")).limit(recallK)
-      exact.join(arm.select("vec_id"), "vec_id")
-        .agg(count(lit(1)).as("hits"))
-        .select(lit(pool.toLong).as("pool"), lit(recallK).as("k"), col("hits"),
-          round(col("hits") / lit(recallK.toDouble), 6).as("recall"))
-    }.reduce(_ unionAll _).orderBy("pool")
+    Similarity.recallCurve(exactTruth(s, dir).localCheckpoint(true),
+      rerankCurve.map { pool =>
+        pool.toLong -> pooled.filter(col("adc_rank") <= pool)
+          .orderBy(desc("cos_sim"), asc("vec_id")).limit(recallK)
+      }, recallK, "pool")
   }
 
   /** The nprobe sweep the curve query walks — doubling steps up to half the
@@ -619,19 +593,12 @@ object SimilarityQueries {
     * granularity.
     */
   def recallCurve(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(s, dir)
-    val exact = Similarity
-      .bruteForceTopK(emb, queryId = 0L, k = recallK)
-      .select("vec_id").localCheckpoint(true)
-    nprobeCurve.map { np =>
-      val ap = Similarity.ivfTopK(emb, queryId = 0L, k = recallK,
-        centroidsNOpt = Some(Similarity.ivfCentroids), nprobe = np)
-      exact.join(ap.select("vec_id"), "vec_id")
-        .agg(count(lit(1)).as("hits"))
-        .select(lit(np.toLong).as("nprobe"), lit(recallK).as("k"), col("hits"),
-          round(col("hits") / lit(recallK.toDouble), 6).as("recall"))
-    }.reduce(_ unionAll _).orderBy("nprobe")
+    Similarity.recallCurve(exactTruth(s, dir).localCheckpoint(true),
+      nprobeCurve.map { np =>
+        np.toLong -> Similarity.ivfTopK(emb, queryId = 0L, k = recallK,
+          centroidsNOpt = Some(Similarity.ivfCentroids), nprobe = np)
+      }, recallK, "nprobe")
   }
 
   /** Code-width FLOOR for the declared batch-ANN query: 8 planes keeps the
@@ -666,17 +633,23 @@ object SimilarityQueries {
     * and coded at the width the index was staged with.
     */
   def batchStagedTopK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
     val planes = stagedWidth(s, dir)
     val (lshT, _) = annTables(s, dir)
-    val q = Similarity.withLshCode(
-        Tables.embeddings(s, dir).filter(col("vec_id") < 3), "embedding", planes)
-      .select(col("vec_id"), col("embedding"), col("lsh_code")).collect()
     Similarity.probeStagedLshBatch(s, lshT,
-        q.map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getLong(2))).toSeq,
-        planes, k = 5)
+        lshQueries(s, dir, planes, col("vec_id") < 3), planes, k = 5)
       .orderBy("query_id", "rn")
   }
+
+  /** The query rows `pred` selects as bounded (vec_id, vector, code)
+    * values — query parameters, not a corpus scan — coded at `planes`, the
+    * width the probed index was staged with.
+    */
+  private def lshQueries(s: SparkSession, dir: String, planes: Int,
+                         pred: org.apache.spark.sql.Column)
+      : Seq[(Long, Array[Float], Long)] =
+    Similarity.withLshCode(Tables.embeddings(s, dir).filter(pred), "embedding", planes)
+      .select(col("vec_id"), col("embedding"), col("lsh_code")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Float](1).toArray, r.getLong(2))).toSeq
 
   /** Recall depth for the batch serving arm = the depth it serves (top-5
     * per query), so the measurement grades exactly what a caller gets.
@@ -714,33 +687,33 @@ object SimilarityQueries {
       .orderBy("query_id", "rn")
   }
 
+  /** Recall@[[batchRecallK]] of a batch arm (`query_id`, `cand_id`) per
+    * query of the 3-vector batch. The truth is each query's exact top-k
+    * over the corpus MINUS the query itself (the batch arms' `query ≠
+    * candidate` contract); the harness's LEFT join keeps a query visible
+    * even at recall 0.
+    */
+  private def recallPerQuery(s: SparkSession, dir: String,
+                             batch: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    val emb = Tables.embeddings(s, dir)
+    val truth = (0L until 3L).map { qid =>
+      Similarity.exactTopK(emb.filter(col("vec_id") =!= qid),
+          Similarity.queryRow(emb, qid), batchRecallK)
+        .select(lit(qid).as("query_id"), col("vec_id"))
+    }.reduce(_ unionByName _)
+    Similarity.recallAt(truth,
+      batch.select(col("query_id"), col("cand_id").as("vec_id")),
+      batchRecallK, keys = Seq("query_id"))
+  }
+
   /** `sim_recall_batch_ivf` — the batch IVF arm's reading per query vs the
     * exact self-excluded truth, next to [[recallBatch]]'s LSH reading: the
     * pair says which arm a batch scorer should route through on this
     * corpus, at the depth it actually serves.
     */
-  def recallBatchIvf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(s, dir)
-    val approx = batchIvfStagedTopK(s, dir)
-      .select(col("query_id"), col("cand_id").as("vec_id"), lit(1).as("hit"))
-    val exact = (0L until 3L).map { qid =>
-      val q = emb.filter(col("vec_id") === qid).select(col("embedding").as("qe"))
-      emb.filter(col("vec_id") =!= qid).crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          round(graft.functions.VectorOps.cosine(col("embedding"), col("qe")), 6)
-            .as("cos_sim"))
-        .orderBy(desc("cos_sim"), asc("vec_id"))
-        .limit(batchRecallK)
-        .select(lit(qid).as("query_id"), col("vec_id"))
-    }.reduce(_ unionByName _)
-    exact.join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count(col("hit")).as("hits"))
-      .select(col("query_id"), lit(batchRecallK).as("k"), col("hits"),
-        round(col("hits") / lit(batchRecallK.toDouble), 6).as("recall"))
-      .orderBy("query_id")
-  }
+  def recallBatchIvf(s: SparkSession, dir: String): DataFrame =
+    recallPerQuery(s, dir, batchIvfStagedTopK(s, dir))
 
   /** Recall@[[batchRecallK]] of the STAGED batch-ANN arm
     * ([[batchStagedTopK]]) per query — the C53 "measure, don't guess" row
@@ -754,28 +727,8 @@ object SimilarityQueries {
     * even at recall 0. At 100 TB the cost is the exact calibration scans —
     * the same price every recall row already pays, ×batch size.
     */
-  def recallBatch(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(s, dir)
-    val approx = batchStagedTopK(s, dir)
-      .select(col("query_id"), col("cand_id").as("vec_id"), lit(1).as("hit"))
-    val exact = (0L until 3L).map { qid =>
-      val q = emb.filter(col("vec_id") === qid).select(col("embedding").as("qe"))
-      emb.filter(col("vec_id") =!= qid).crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          round(graft.functions.VectorOps.cosine(col("embedding"), col("qe")), 6)
-            .as("cos_sim"))
-        .orderBy(desc("cos_sim"), asc("vec_id"))
-        .limit(batchRecallK)
-        .select(lit(qid).as("query_id"), col("vec_id"))
-    }.reduce(_ unionByName _)
-    exact.join(approx, Seq("query_id", "vec_id"), "left")
-      .groupBy("query_id")
-      .agg(count(col("hit")).as("hits"))
-      .select(col("query_id"), lit(batchRecallK).as("k"), col("hits"),
-        round(col("hits") / lit(batchRecallK.toDouble), 6).as("recall"))
-      .orderBy("query_id")
-  }
+  def recallBatch(s: SparkSession, dir: String): DataFrame =
+    recallPerQuery(s, dir, batchStagedTopK(s, dir))
 
   /** Code-width FLOOR for the STAGED serving path: 8 planes = 256 code
     * values keeps Hamming-1 candidate pools dense enough to fill k at
@@ -816,8 +769,7 @@ object SimilarityQueries {
         val emb = Tables.embeddings(s, dir)
         Similarity.stageLshBucketed(emb, lsh, planes, stagedLshBuckets)
         import org.apache.spark.sql.functions.col
-        val cent = emb.filter(col("vec_id") < Similarity.ivfCentroids)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        val cent = Similarity.standInCentroids(emb, Similarity.ivfCentroids)
         Similarity.stageIvfBucketed(emb, cent, ivf, stagedIvfBuckets)
       }
     }
@@ -850,13 +802,20 @@ object SimilarityQueries {
     */
   def filteredTopK(s: SparkSession, dir: String): DataFrame = {
     val planes = stagedWidth(s, dir)
-    import org.apache.spark.sql.functions.col
-    val q = Similarity.withLshCode(
-        Tables.embeddings(s, dir).filter(col("vec_id") === 0), "embedding", planes)
-      .select(col("embedding"), col("lsh_code")).head()
-    Similarity.probeStagedLshFiltered(s, annFilteredTable(s, dir),
-      q.getSeq[Float](0).toArray, q.getLong(1),
+    val (_, qe, qcode) = lshQueries(s, dir, planes, col("vec_id") === 0).head
+    Similarity.probeStagedLshFiltered(s, annFilteredTable(s, dir), qe, qcode,
       col("label") === filterLabel && col("vec_id") =!= 0, planes, k = 10)
+  }
+
+  /** The filtered rows' truth: exact top-[[recallK]] of query 0 among the
+    * predicate's population (`label = filterLabel`, query excluded — the
+    * same rows the filtered probes may return).
+    */
+  private def filteredTruth(s: SparkSession, dir: String): DataFrame = {
+    val emb = Tables.embeddings(s, dir)
+    Similarity.exactTopK(
+      emb.filter(col("label") === filterLabel && col("vec_id") =!= 0),
+      Similarity.queryRow(emb, 0L), recallK)
   }
 
   /** `sim_recall_filter` — recall@10 of the FILTERED LSH arm against the
@@ -869,23 +828,8 @@ object SimilarityQueries {
     * which measures the arm that holds up. This row stays as the recorded
     * negative result.
     */
-  def recallFilter(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(s, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    val exact = emb.filter(col("label") === filterLabel && col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(graft.functions.VectorOps.cosine(col("embedding"), col("qe")), 6)
-          .as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-      .limit(recallK)
-      .select("vec_id")
-    exact.join(filteredTopK(s, dir).select("vec_id"), "vec_id")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(recallK).as("k"), col("hits"),
-        round(col("hits") / lit(recallK.toDouble), 6).as("recall"))
-  }
+  def recallFilter(s: SparkSession, dir: String): DataFrame =
+    Similarity.recallAt(filteredTruth(s, dir), filteredTopK(s, dir), recallK)
 
   /** Lists probed by the FILTERED IVF arm: 2× the unfiltered probe's 2 —
     * the filtered-search compensation lives in `nprobe` (more inverted
@@ -906,8 +850,7 @@ object SimilarityQueries {
       Staged(Seq(t), s"ann_ivf_filtered:k$kc:pl_label:v2") {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, dir)
-        val cent = emb.filter(col("vec_id") < kc)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        val cent = Similarity.standInCentroids(emb, kc)
         Similarity.stageIvfBucketed(emb, cent, t, buckets = kc,
           payloadCols = Seq("label"))
       }
@@ -933,23 +876,8 @@ object SimilarityQueries {
     * the r11 numbers said can actually serve this corpus. The spec gates
     * it at ≥ the LSH filtered arm's measured recall.
     */
-  def recallFilterIvf(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val emb = Tables.embeddings(s, dir)
-    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-    val exact = emb.filter(col("label") === filterLabel && col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(graft.functions.VectorOps.cosine(col("embedding"), col("qe")), 6)
-          .as("cos_sim"))
-      .orderBy(desc("cos_sim"), asc("vec_id"))
-      .limit(recallK)
-      .select("vec_id")
-    exact.join(filteredIvfTopK(s, dir).select("vec_id"), "vec_id")
-      .agg(count(lit(1)).as("hits"))
-      .select(lit(recallK).as("k"), col("hits"),
-        round(col("hits") / lit(recallK.toDouble), 6).as("recall"))
-  }
+  def recallFilterIvf(s: SparkSession, dir: String): DataFrame =
+    Similarity.recallAt(filteredTruth(s, dir), filteredIvfTopK(s, dir), recallK)
 
   /** Top-10 by cosine via the STAGED LSH index: the probe reads only the
     * planes+1 Hamming-≤1 probe-code buckets of the staged table (bucket
@@ -964,18 +892,10 @@ object SimilarityQueries {
   def lshStagedTopK(s: SparkSession, dir: String): DataFrame = {
     val planes = stagedWidth(s, dir)
     val (lshT, _) = annTables(s, dir)
-    import org.apache.spark.sql.functions.col
-    val q = Similarity.withLshCode(
-        Tables.embeddings(s, dir).filter(col("vec_id") === 0), "embedding", planes)
-      .select(col("embedding"), col("lsh_code")).head()
-    Similarity.probeStagedLsh(s, lshT, q.getSeq[Float](0).toArray, q.getLong(1),
-      planes, k = 10)
+    val (_, qe, qcode) = lshQueries(s, dir, planes, col("vec_id") === 0).head
+    Similarity.probeStagedLsh(s, lshT, qe, qcode, planes, k = 10)
   }
 
-  /** Top-10 by cosine via the STAGED IVF index: probe the 2 nearest inverted
-    * lists by reading only their buckets. Probe-list selection runs over the
-    * 16-row centroid table (a model artifact — bounded driver traffic).
-    */
   /** The staged IVF-PQ table, cached with the same discipline as
     * [[annTables]] (registry-held, session-evicted, catalog-revalidated).
     * r16 (verdict item 1): staged at the ADAPTIVE list count with one
@@ -994,8 +914,7 @@ object SimilarityQueries {
       Staged(Seq(t), s"ann_ivfpq:k$kc:pqk${Similarity.pqK}:res1:v3") {
         val emb = Tables.embeddings(s, dir)
         import org.apache.spark.sql.functions.col
-        val cent = emb.filter(col("vec_id") < kc)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        val cent = Similarity.standInCentroids(emb, kc)
         Similarity.stageIvfPqBucketed(emb, cent,
           Similarity.pqCodebookResidual(emb, cent, centroidsN = kc), t,
           buckets = kc, centroidsN = kc)
@@ -1064,6 +983,10 @@ object SimilarityQueries {
   def recallIvfPqRerank(s: SparkSession, dir: String): DataFrame =
     recallOf(s, dir, ivfPqStagedRerank(s, dir))
 
+  /** Top-10 by cosine via the STAGED IVF index: probe the 2 nearest inverted
+    * lists by reading only their buckets. Probe-list selection runs over the
+    * 16-row centroid table (a model artifact — bounded driver traffic).
+    */
   def ivfStagedTopK(s: SparkSession, dir: String): DataFrame =
     ivfStagedPool(s, dir, k = 10)
 
@@ -1135,8 +1058,7 @@ object SimilarityQueries {
       Staged(Seq(t), s"ann_ivf_adaptive:k$kc:v1") {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, dir)
-        val cent = emb.filter(col("vec_id") < kc)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        val cent = Similarity.standInCentroids(emb, kc)
         Similarity.stageIvfBucketed(emb, cent, t, buckets = kc)
       }
     }.head
@@ -1190,8 +1112,7 @@ object SimilarityQueries {
       Staged(Seq(t), s"ann_ivf_2level:k$kc:g$g:v1") {
         import org.apache.spark.sql.functions.col
         val emb = Tables.embeddings(s, dir)
-        val cent = emb.filter(col("vec_id") < kc)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        val cent = Similarity.standInCentroids(emb, kc)
         Similarity.stageIvfBucketedTwoLevel(emb, cent, g, t, buckets = kc)
       }
     }.head
@@ -1229,8 +1150,7 @@ object SimilarityQueries {
     val kc = adaptiveIvfK(s, dir)
     val g = Similarity.groupsFor(kc)
     val emb = Tables.embeddings(s, dir)
-    val cent = emb.filter(col("vec_id") < kc)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val cent = Similarity.standInCentroids(emb, kc)
     val exact = emb.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("cid"),
         graft.functions.VectorOps.cosine(col("embedding"), col("ce")).as("ccos"))
@@ -1275,8 +1195,7 @@ object SimilarityQueries {
     import org.apache.spark.sql.functions._
     val t = compactIvfTable(dir)
     val emb = Tables.embeddings(s, dir)
-    val cent = emb.filter(col("vec_id") < Similarity.ivfCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val cent = Similarity.standInCentroids(emb, Similarity.ivfCentroids)
     val art = centArtifact(s, dir, Similarity.ivfCentroids)
     Similarity.stageIvfBucketed(emb.filter(col("vec_id") % 4 === 0), cent, t,
       stagedIvfBuckets, centArtOpt = Some(art))
@@ -1323,32 +1242,52 @@ object SimilarityQueries {
     * corpus minus the deleted residues.
     */
   def indexDelete(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val t = deleteIvfTable(dir)
-    val tomb = t + "_tomb"
     val kc = adaptiveIvfK(s, dir)
     val emb = Tables.embeddings(s, dir)
-    val cent = emb.filter(col("vec_id") < kc)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val cent = Similarity.standInCentroids(emb, kc)
     val art = centArtifact(s, dir, kc)
-    stageIvfAt(emb, cent, t, kc, centArtOpt = Some(art))
-    graft.operators.Bucketing.dropStaged(s, tomb)
-    deleteResidues.foreach { r =>
-      Similarity.deleteStagedIvf(emb.filter(col("vec_id") % 10 === r), cent,
-        tomb, buckets = kc, centroidsN = kc, centArtOpt = Some(art))
-    }
     val (qe, probeCids) = probeSelection(s, dir, kc)
-    val pre = Similarity.probeStagedIvfDeletes(s, t, tomb, qe, probeCids, k = 10)
-      .collect().toSeq
-    val rewritten = graft.operators.Bucketing.compactDeletes(s, t, tomb,
-      "vec_id", "cid", Seq("cid"), buckets = kc)
+    deleteCertificate(s, dir, deleteIvfTable(dir), "cid", kc)(
+      t => stageIvfAt(emb, cent, t, kc, centArtOpt = Some(art)))(
+      (batch, tomb) => Similarity.deleteStagedIvf(batch, cent, tomb, buckets = kc,
+        centroidsN = kc, centArtOpt = Some(art)))(
+      (t, tomb) => Similarity.probeStagedIvf(s, t, qe, probeCids, k = 10,
+        tombTableOpt = tomb))
+  }
+
+  /** The delete certificate every tombstone lifecycle runs: stage the arm
+    * as table `t`, land each [[deleteResidues]] batch as tombstones in
+    * `t_tomb`, probe WITH the tombstones (`pre` — deletes serve before any
+    * rewrite), apply them with [[graft.operators.Bucketing.compactDeletes]]
+    * on the arm's storage `key` (which must rewrite at least one bucket),
+    * drop the tombstones and probe again WITHOUT them (`post`). The flow
+    * requires `post == pre` — a compaction that lost a live row or
+    * resurrected a deleted one fails before the oracle runs — and returns
+    * `post`, the declared result. Each arm passes only its stage call,
+    * its delete call (batch, tombstone table) and its probe (table,
+    * optional tombstone table).
+    */
+  private def deleteCertificate(s: SparkSession, dir: String, t: String,
+                                key: String, buckets: Int)(stage: String => Unit)(
+      tombstone: (DataFrame, String) => Unit)(
+      probe: (String, Option[String]) => DataFrame): DataFrame = {
+    import graft.operators.Bucketing
+    val tomb = t + "_tomb"
+    stage(t)
+    Bucketing.dropStaged(s, tomb)
+    deleteResidues.foreach { r =>
+      tombstone(Tables.embeddings(s, dir).filter(col("vec_id") % 10 === r), tomb)
+    }
+    val pre = probe(t, Some(tomb)).collect().toSeq
+    val rewritten = Bucketing.compactDeletes(s, t, tomb, "vec_id", key, Seq(key),
+      buckets)
     require(rewritten.nonEmpty,
       "two tombstoned batches must dirty at least one bucket")
-    graft.operators.Bucketing.dropStaged(s, tomb)
-    val post = Similarity.probeStagedIvf(s, t, qe, probeCids, k = 10)
+    Bucketing.dropStaged(s, tomb)
+    val post = probe(t, None)
     require(post.collect().toSeq == pre,
-      "applying tombstones changed the probe answer — a live row was lost " +
-        "or a deleted one resurrected")
+      s"applying tombstones changed the probe answer of $t — a live row was " +
+        "lost or a deleted one resurrected")
     post
   }
 
@@ -1370,33 +1309,15 @@ object SimilarityQueries {
     * resolved code width.
     */
   def indexLshDelete(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
     val planes = stagedWidth(s, dir)
-    val t = lshDeleteTable(dir)
-    val tomb = t + "_tomb"
     val emb = Tables.embeddings(s, dir)
-    Similarity.stageLshBucketed(emb, t, planes, stagedLshBuckets)
-    graft.operators.Bucketing.dropStaged(s, tomb)
-    deleteResidues.foreach { r =>
-      Similarity.deleteStagedLsh(emb.filter(col("vec_id") % 10 === r), tomb,
-        planes, stagedLshBuckets)
-    }
-    val q = Similarity.withLshCode(
-        emb.filter(col("vec_id") === 0), "embedding", planes)
-      .select(col("embedding"), col("lsh_code")).head()
-    val (qe, qcode) = (q.getSeq[Float](0).toArray, q.getLong(1))
-    val pre = Similarity.probeStagedLshDeletes(s, t, tomb, qe, qcode, planes,
-      k = 10).collect().toSeq
-    val rewritten = graft.operators.Bucketing.compactDeletes(s, t, tomb,
-      "vec_id", "lsh_code", Seq("lsh_code"), stagedLshBuckets)
-    require(rewritten.nonEmpty,
-      "two tombstoned batches must dirty at least one bucket")
-    graft.operators.Bucketing.dropStaged(s, tomb)
-    val post = Similarity.probeStagedLsh(s, t, qe, qcode, planes, k = 10)
-    require(post.collect().toSeq == pre,
-      "applying tombstones changed the LSH probe answer — a live row was " +
-        "lost or a deleted one resurrected")
-    post
+    val (_, qe, qcode) = lshQueries(s, dir, planes, col("vec_id") === 0).head
+    deleteCertificate(s, dir, lshDeleteTable(dir), "lsh_code", stagedLshBuckets)(
+      t => Similarity.stageLshBucketed(emb, t, planes, stagedLshBuckets))(
+      (batch, tomb) => Similarity.deleteStagedLsh(batch, tomb, planes,
+        stagedLshBuckets))(
+      (t, tomb) => Similarity.probeStagedLsh(s, t, qe, qcode, planes, k = 10,
+        tombTableOpt = tomb))
   }
 
   def pqDeleteTable(dir: String): String =
@@ -1419,38 +1340,21 @@ object SimilarityQueries {
     * stage-time artifact — deletion removes ROWS, not the trained model).
     */
   def indexPqDelete(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val t = pqDeleteTable(dir)
-    val tomb = t + "_tomb"
     val kc = adaptiveIvfK(s, dir)
     val emb = Tables.embeddings(s, dir)
-    val cent = emb.filter(col("vec_id") < kc)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val cent = Similarity.standInCentroids(emb, kc)
     val art = centArtifact(s, dir, kc)
     val cbArt = pqCbArtifact(s, dir, kc)
-    Similarity.stageIvfPqBucketed(emb, cent,
-      Similarity.pqCodebookResidual(emb, cent, centroidsN = kc), t,
-      buckets = kc, centroidsN = kc)
-    graft.operators.Bucketing.dropStaged(s, tomb)
-    deleteResidues.foreach { r =>
-      Similarity.deleteStagedIvf(emb.filter(col("vec_id") % 10 === r), cent,
-        tomb, buckets = kc, centroidsN = kc, centArtOpt = Some(art))
-    }
     val (_, probeCids) = probeSelection(s, dir, kc)
-    val pre = Similarity.probeStagedIvfPq(s, t, emb, 0L, probeCids, k = 10,
-      centroidsN = kc, tombTableOpt = Some(tomb), centArtOpt = Some(art),
-      cbArtOpt = Some(cbArt)).collect().toSeq
-    val rewritten = graft.operators.Bucketing.compactDeletes(s, t, tomb,
-      "vec_id", "cid", Seq("cid"), buckets = kc)
-    require(rewritten.nonEmpty,
-      "two tombstoned batches must dirty at least one bucket")
-    graft.operators.Bucketing.dropStaged(s, tomb)
-    val post = Similarity.probeStagedIvfPq(s, t, emb, 0L, probeCids, k = 10,
-      centroidsN = kc, centArtOpt = Some(art), cbArtOpt = Some(cbArt))
-    require(post.collect().toSeq == pre,
-      "applying tombstones changed the ADC probe answer — a live row was " +
-        "lost or a deleted one resurrected")
-    post
+    deleteCertificate(s, dir, pqDeleteTable(dir), "cid", kc)(
+      t => Similarity.stageIvfPqBucketed(emb, cent,
+        Similarity.pqCodebookResidual(emb, cent, centroidsN = kc), t,
+        buckets = kc, centroidsN = kc))(
+      (batch, tomb) => Similarity.deleteStagedIvf(batch, cent, tomb, buckets = kc,
+        centroidsN = kc, centArtOpt = Some(art)))(
+      (t, tomb) => Similarity.probeStagedIvfPq(s, t, emb, 0L, probeCids, k = 10,
+        centroidsN = kc, tombTableOpt = tomb, centArtOpt = Some(art),
+        cbArtOpt = Some(cbArt)))
   }
 
   /** The rotation lifecycle's live serving name (distinct from every other
@@ -1505,8 +1409,7 @@ object SimilarityQueries {
     val next = live + "_next"
     val kc = adaptiveIvfK(s, dir)
     val emb = Tables.embeddings(s, dir)
-    val centV1 = emb.filter(col("vec_id") < kc)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val centV1 = Similarity.standInCentroids(emb, kc)
     val centV2 = trainedCent(s, dir)
     stageIvfAt(emb, centV1, live, kc,
       centArtOpt = Some(centArtifact(s, dir, kc)))
@@ -1705,8 +1608,7 @@ object SimilarityQueries {
       val t = s"graft_ann_ivfw_$tag"
       Staged(Seq(t), s"ann_ivf_white:ib$stagedIvfBuckets:c${Similarity.ivfCentroids}:v1") {
         val w = whitened(s, dir)
-        val cent = w.filter(col("vec_id") < Similarity.ivfCentroids)
-          .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+        val cent = Similarity.standInCentroids(w, Similarity.ivfCentroids)
         val assigned = w.crossJoin(broadcast(cent))
           .select(col("vec_id"), col("embedding"), col("cid"),
             Similarity.doubleCosine("embedding", "ce").as("ccos"))
@@ -1729,10 +1631,9 @@ object SimilarityQueries {
     val w = whitened(s, dir)
     val qw = w.filter(col("vec_id") === 0).select("embedding")
       .head().getSeq[Double](0).toArray
-    val probeCids = w.filter(col("vec_id") < Similarity.ivfCentroids)
+    val probeCids = Similarity.standInCentroids(w, Similarity.ivfCentroids)
       .withColumn("qe", typedlit(qw))
-      .select(col("vec_id").as("cid"),
-        Similarity.doubleCosine("embedding", "qe").as("qcos"))
+      .select(col("cid"), Similarity.doubleCosine("ce", "qe").as("qcos"))
       .orderBy(desc("qcos"), asc("cid"))
       .limit(2).collect().map(_.getLong(0)).toSeq
     graft.operators.Bucketing.read(s, t)
@@ -1770,13 +1671,6 @@ object SimilarityQueries {
         org.apache.spark.sql.functions.col("label"),
         org.apache.spark.sql.functions.col("embedding").as("ev")))
 
-  /** DuckDB rendering of the full trained-IVF path: the [[trainedIters]]
-    * Lloyd iterations unrolled as CTE generations (assignment argmax via
-    * ROW_NUMBER with the same (cos DESC, cid) tie rule as Spark's `max_by`;
-    * per-position means as list_sum over a SORTED value list — the identical
-    * fixed summation order as the Scala side), then assign-all, probe the 2
-    * nearest lists, exact cosine top-10.
-    */
   /** The Lloyd-chain CTEs alone (`sample`, `cent0`, generations up to
     * `cent$iters`) — shared by the trained probe, its staged/routed twins,
     * and the rotation gate's v2 arm.
@@ -1809,7 +1703,7 @@ object SimilarityQueries {
     * floor, the routed two-level chain above it — exactly the regime split
     * [[stageIvfAt]] builds with. Produces `fasn(vec_id, cid)`.
     */
-  private def trainedAsnCte(k: Int, iters: Int = trainedIters): String =
+  private def trainedAsnCte(k: Int, iters: Int): String =
     if (k <= Similarity.ivfCentroids)
       s"""fasn AS (SELECT vec_id, cid FROM
          | (SELECT e.vec_id, c.cid, ROW_NUMBER() OVER (PARTITION BY e.vec_id
@@ -1817,6 +1711,13 @@ object SimilarityQueries {
          |  FROM embeddings e, cent$iters c) t WHERE rn = 1)""".stripMargin
     else twoLevelFrom(s"cent$iters", Similarity.groupsFor(k), "t", "fasn")
 
+  /** DuckDB rendering of the full trained-IVF path: the [[trainedIters]]
+    * Lloyd iterations unrolled as CTE generations (assignment argmax via
+    * ROW_NUMBER with the same (cos DESC, cid) tie rule as Spark's `max_by`;
+    * per-position means as list_sum over a SORTED value list — the identical
+    * fixed summation order as the Scala side), then assign-all, probe the 2
+    * nearest lists, exact cosine top-10.
+    */
   private def ivfTrainedSql(k: Int = Similarity.ivfCentroids,
                             iters: Int = trainedIters,
                             sampleMax: Long = 4096L): String =
@@ -1996,18 +1897,14 @@ object SimilarityQueries {
   }
 
   /** DuckDB rendering of the composed IVF-PQ path with RESIDUAL encoding
-    * (r12 verdict item 2): the `sim_ivf_topk` assignment/probe CTEs pick
-    * the candidate lists; each vector's residual `v − ce(cid)` is sliced
-    * and coded against the residual codebook (codewords = residuals of
-    * vectors 16..31 — the centroid prefix's residuals are identically zero,
-    * so the stand-in starts past it); ranking adds the exact per-list
-    * `dot(q, ce)` coarse term to the ADC residual sum.
-    */
-  private def ivfPqSql: String = ivfPqSqlWith("")
-
-  /** The composed IVF-PQ oracle at a resolved list count — the staged and
-    * unstaged arms both rank at [[Similarity.centroidsFor]]'s resolution
-    * (r16: the composed arms no longer pin 16 lists).
+    * (r12 verdict item 2) at a resolved list count: the `sim_ivf_topk`
+    * assignment/probe CTEs pick the candidate lists; each vector's residual
+    * `v − ce(cid)` is sliced and coded against the residual codebook
+    * (codewords = residuals of the pqK vectors past the centroid prefix,
+    * whose own residuals are identically zero); ranking adds the exact
+    * per-list `dot(q, ce)` coarse term to the ADC residual sum. The staged
+    * and unstaged arms both rank at [[Similarity.centroidsFor]]'s
+    * resolution (r16: the composed arms no longer pin 16 lists).
     */
   private def ivfPqSqlAt(kc: Int, limit: Int = 10, where: String = ""): String =
     ivfPqSqlWith("", limit, kc, where)
@@ -2019,8 +1916,7 @@ object SimilarityQueries {
     * text for both arms, so swap-in-a-trained-codebook cannot drift the
     * serving arithmetic.
     */
-  private def ivfPqSqlWith(cbChain: String, limit: Int = 10,
-                           cN: Int = Similarity.ivfCentroids,
+  private def ivfPqSqlWith(cbChain: String, limit: Int, cN: Int,
                            where: String = ""): String = {
     val (m, kk, sd) = (Similarity.pqM, Similarity.pqK, Similarity.pqSubDim)
     val dims = Similarity.dims
@@ -2122,8 +2018,7 @@ object SimilarityQueries {
       import org.apache.spark.sql.functions.col
       val kc = adaptiveIvfK(s, dir)
       val emb = Tables.embeddings(s, dir)
-      val cent = emb.filter(col("vec_id") < kc)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+      val cent = Similarity.standInCentroids(emb, kc)
       Similarity.trainPqCodebookResidual(emb, cent, iters = pqTrainedIters,
         nOpt = Some(embCount(s, dir)), centroidsN = kc)
     }
@@ -2149,13 +2044,6 @@ object SimilarityQueries {
   def recallIvfPqTrained(s: SparkSession, dir: String): DataFrame =
     recallOf(s, dir, ivfPqTrainedTopK(s, dir))
 
-  /** A `def` OF THE TARGET DIR, not a `val`: the two LSH oracles render at
-    * the ADAPTIVE code width their queries resolved FOR THAT DIR
-    * ([[AdaptiveWidth.forOracle]]), and `Verify` dumps `oracle_sql.json`
-    * AFTER running the queries — so the dumped SQL always carries the width
-    * the parquet results were computed with, at any scale factor, even when
-    * one JVM verifies several dirs of different scale.
-    */
   /** The nprobe-curve oracle: the sim_recall_ivf chain with one probed arm
     * per [[nprobeCurve]] setting, sharing the assignment and exact-truth
     * CTEs — the SQL is generated from the SAME Seq the Spark side walks.
@@ -2197,9 +2085,6 @@ object SimilarityQueries {
        |  round(count(*)/$recallK.0, 6) AS recall
        |FROM ex JOIN ($armSql) ap USING (vec_id)""".stripMargin
 
-  /** The re-ranked PQ arm's oracle: ADC pool from the parameterized pqSql,
-    * exact-cosine re-rank with the engine's (round-6 DESC, vec_id) order.
-    */
   /** The rotation gate's oracle at a list count: both generations' corpus
     * assignments re-derived (v1 = the prefix stand-in codebook, v2 = the
     * unrolled training chain — each exact at the floor, ROUTED above it,
@@ -2275,6 +2160,9 @@ object SimilarityQueries {
        |FROM embeddings e JOIN cand USING (vec_id), q
        |ORDER BY cos_sim DESC, e.vec_id LIMIT $recallK""".stripMargin
 
+  /** The re-ranked PQ arm's oracle: ADC pool from the parameterized pqSql,
+    * exact-cosine re-rank with the engine's (round-6 DESC, vec_id) order.
+    */
   private def pqRerankSql: String =
     s"""WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
        |cand AS (SELECT vec_id FROM (${pqSql(rerankPool)}) t)
@@ -2305,17 +2193,6 @@ object SimilarityQueries {
        |) ORDER BY pool""".stripMargin
   }
 
-  /** The PCA oracle mirrors [[graft.operators.Spectral]] stage for stage:
-    * the same exact-decimal Gram cells (round-to-9 products, DECIMAL(38,9)
-    * sums, unscaled ×1e9 integers), the same max-normalized truncating
-    * power iteration (DuckDB `//` and BigInt `/` both truncate toward zero,
-    * so negative components divide identically), and the same scale-1e6
-    * Rayleigh/explained-ratio divisions — bit-exact end to end.
-    */
-  /** Shared CTE body (Gram cells + the iteration chain up to the trained
-    * eigenvector) — `sim_pca` reads the component off it, `sim_pca_project`
-    * applies it, exactly as the engine shares one cached model.
-    */
   /** One power-iteration CTE chain over Gram table `gT`, vectors named
     * `$vP{0..rounds}` — shared by the top-component chain and the deflated
     * second chain.
@@ -2333,6 +2210,10 @@ object SimilarityQueries {
     }.mkString(",\n")
   }
 
+  /** Shared CTE body (Gram cells + the iteration chain up to the trained
+    * eigenvector) — `sim_pca` reads the component off it, `sim_pca_project`
+    * applies it, exactly as the engine shares one cached model.
+    */
   private[queries] def pcaCtes: String = {
     val d = Similarity.dims
     val S = graft.operators.Spectral.vecScale
@@ -2348,6 +2229,13 @@ object SimilarityQueries {
        |$iters""".stripMargin
   }
 
+  /** The PCA oracle mirrors [[graft.operators.Spectral]] stage for stage:
+    * the same exact-decimal Gram cells (round-to-9 products, DECIMAL(38,9)
+    * sums, unscaled ×1e9 integers), the same max-normalized truncating
+    * power iteration (DuckDB `//` and BigInt `/` both truncate toward zero,
+    * so negative components divide identically), and the same scale-1e6
+    * Rayleigh/explained-ratio divisions — bit-exact end to end.
+    */
   private def pcaSql: String =
     s"""WITH $pcaCtes,
        |wf AS (SELECT g.i, sum(g.gu * v.v) AS w FROM g JOIN v$pcaRounds v ON v.i = g.j GROUP BY g.i),
@@ -2502,6 +2390,13 @@ object SimilarityQueries {
        |FROM a ORDER BY label""".stripMargin
   }
 
+  /** A `def` OF THE TARGET DIR, not a `val`: the two LSH oracles render at
+    * the ADAPTIVE code width their queries resolved FOR THAT DIR
+    * ([[AdaptiveWidth.forOracle]]), and `Verify` dumps `oracle_sql.json`
+    * AFTER running the queries — so the dumped SQL always carries the width
+    * the parquet results were computed with, at any scale factor, even when
+    * one JVM verifies several dirs of different scale.
+    */
   def oracle(dir: String): Map[String, String] = {
     // ONE per-dir list-count resolution for every composed arm's oracle —
     // the floor at driver scale, the corpus's √(n/256) above it (r16)

@@ -96,14 +96,6 @@ object SqlGen {
        |pruned AS (${prunedBucketsSql("bands", "bh", cap)}),
        |cands AS ($candidatePairsSql)""".stripMargin
 
-  /** SimHash per-doc CTE chain: toks -> votes -> sims(doc_id, simhash).
-    *
-    * Mirror of Dedup.simhash: 64 hash bits from two 32-bit md5 halves (each
-    * safely inside signed BIGINT), fingerprint assembled by summation with
-    * the bit-63 term (`Long.MinValue`, written as -(2^63-1)-1 because the
-    * positive literal doesn't fit BIGINT) added FIRST — partial sums then
-    * stay in signed-64 range, which matters because DuckDB checks overflow.
-    */
   /** Token count / punctuation ratio / stopword ratio / composite quality —
     * the DuckDB rendering of `TextFunctions.qualityScore`, shared by every
     * oracle that scores text (curation, weighted sampling, keep-best).
@@ -125,6 +117,14 @@ object SqlGen {
       |wc AS (SELECT w, count(*) AS c FROM tk GROUP BY w),
       |tot AS (SELECT CAST(sum(c) AS DOUBLE) AS tot FROM wc)""".stripMargin
 
+  /** SimHash per-doc CTE chain: toks -> votes -> sims(doc_id, simhash).
+    *
+    * Mirror of Dedup.simhash: 64 hash bits from two 32-bit md5 halves (each
+    * safely inside signed BIGINT), fingerprint assembled by summation with
+    * the bit-63 term (`Long.MinValue`, written as -(2^63-1)-1 because the
+    * positive literal doesn't fit BIGINT) added FIRST — partial sums then
+    * stay in signed-64 range, which matters because DuckDB checks overflow.
+    */
   def simhashPrefix(bits: Int = graft.operators.Dedup.simhashBits): String = {
     def bitExpr(b: Int) = if (b < 32) s"(hlo >> $b)" else s"(hhi >> ${b - 32})"
     val votes = (0 until bits)

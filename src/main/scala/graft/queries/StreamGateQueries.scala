@@ -435,6 +435,14 @@ object StreamGateQueries {
       .toDF("sources_kept", "kept", "diffs")
   }
 
+  /** Deterministic user-slice modulus for [[join]]: the certificate needs
+    * cross-batch join-state semantics, not corpus throughput — state-store
+    * puts for every leg row dominate the gate's cost, so the gate joins a
+    * 1-in-[[joinSliceMod]] slice of users (both arms identically; the
+    * oracle carries the same predicate).
+    */
+  val joinSliceMod = 5
+
   /** `stream_join` — the stream-stream JOIN (the one Structured Streaming
     * surface still spec-only after the r12 first tranche: StreamOps'
     * reverseFlowJoin is flows-shaped) under the driver gate: each click
@@ -449,14 +457,6 @@ object StreamGateQueries {
     * batches so pairs whose legs arrive in DIFFERENT micro-batches must be
     * emitted from join state, which a single-batch replay never exercises.
     */
-  /** Deterministic user-slice modulus for [[join]]: the certificate needs
-    * cross-batch join-state semantics, not corpus throughput — state-store
-    * puts for every leg row dominate the gate's cost, so the gate joins a
-    * 1-in-[[joinSliceMod]] slice of users (both arms identically; the
-    * oracle carries the same predicate).
-    */
-  val joinSliceMod = 5
-
   def join(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     def pairsOf(df0: DataFrame): DataFrame = {
@@ -536,9 +536,7 @@ object StreamGateQueries {
     */
   private def ivfCent(s: SparkSession, dir: String): DataFrame =
     cachedFrame(s, dir, "ivf_cent") {
-      Tables.embeddings(s, dir)
-        .filter(col("vec_id") < Similarity.ivfCentroids)
-        .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+      Similarity.standInCentroids(Tables.embeddings(s, dir), Similarity.ivfCentroids)
     }
 
   /** The IVF gates' probe: the first vector and its 2 nearest lists. */
@@ -676,8 +674,8 @@ object StreamGateQueries {
           ckpt, ivfBuckets))
       // deletes must serve from the tombstones BEFORE any rewrite
       val (pv, pcids) = ivfProbeVec(s, dir)
-      val shadowed = Similarity.probeStagedIvfDeletes(s, t, t + "_tomb",
-        pv, pcids, k = 50).collect()
+      val shadowed = Similarity.probeStagedIvf(s, t, pv, pcids, k = 50,
+        tombTableOpt = Some(t + "_tomb")).collect()
       require(shadowed.forall(_.getLong(0) % 10 != residue),
         "a streamed-in tombstone failed to shadow its row")
       val rewritten = Bucketing.compactDeletes(s, t, t + "_tomb",
@@ -732,12 +730,6 @@ object StreamGateQueries {
     Seq((docs, postDiff + probeDiff)).toDF("docs", "diffs")
   }
 
-  /** DuckDB oracles: `diffs` is the in-engine certificate (always 0 when
-    * stream ≡ batch); the surface columns are recomputed independently —
-    * the q51-oracle gap construction for sessions, HAVING-≥2 types for the
-    * TWAP cursor, the q73/q64 oracles wrapped in counts, epoch-bucket
-    * groups for the windowed pair.
-    */
   /** `stream_gram` — the spectral MODEL under the driver gate, completing
     * the maintenance family (indexes C29/C66/C168 keep serving structures
     * fresh; this keeps a trained-model's sufficient statistics fresh): the
@@ -773,6 +765,12 @@ object StreamGateQueries {
       .toDF("cells", "diffs", "v1", "lam6")
   }
 
+  /** DuckDB oracles: `diffs` is the in-engine certificate (always 0 when
+    * stream ≡ batch); the surface columns are recomputed independently —
+    * the q51-oracle gap construction for sessions, HAVING-≥2 types for the
+    * TWAP cursor, the q73/q64 oracles wrapped in counts, epoch-bucket
+    * groups for the windowed pair.
+    */
   val oracle: Map[String, String] = Map(
     "stream_gram" -> {
       val r = SimilarityQueries.pcaRounds

@@ -452,20 +452,6 @@ object TextQueries {
     */
   val heavyCapacity = 64
 
-  /** Cached corpus-vocabulary sizes for the exact-regime guard (one count
-    * job per (session, dir), shared across declare-time re-plans;
-    * registry-held so a stopped session's entry is evicted).
-    */
-
-  /** Heavy hitters over the token stream via [[graft.expressions.FreqItemsAgg]]
-    * — ONE mergeable aggregate whose buffer holds at most [[heavyCapacity]]
-    * counters no matter the input size; at 100 TB the shuffle carries a
-    * fixed-size sketch, never the token-frequency table. The oracle compares
-    * against exact counts, which is sound only while the corpus vocabulary
-    * fits the sketch (the Misra-Gries exact regime — decrements never
-    * fire); the guard fails LOUDLY if the corpus outgrows that regime
-    * rather than silently diverging from the exact-count oracle.
-    */
   val cmsDepth = 4
   val cmsWidth = 64
 
@@ -494,6 +480,15 @@ object TextQueries {
       .orderBy(desc("exact"), asc("token"))
   }
 
+  /** Heavy hitters over the token stream via [[graft.expressions.FreqItemsAgg]]
+    * — ONE mergeable aggregate whose buffer holds at most [[heavyCapacity]]
+    * counters no matter the input size; at 100 TB the shuffle carries a
+    * fixed-size sketch, never the token-frequency table. The oracle compares
+    * against exact counts, which is sound only while the corpus vocabulary
+    * fits the sketch (the Misra-Gries exact regime — decrements never
+    * fire); the guard fails LOUDLY if the corpus outgrows that regime
+    * rather than silently diverging from the exact-count oracle.
+    */
   def heavy(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge
     val toks = TextBackbone.unigrams(s, dir).select(col("w").as("token"))
@@ -740,25 +735,6 @@ object TextQueries {
   /** Rows surfaced by `text_bpe_apply` (bounded declared output). */
   val bpeApplyLimit = 200
 
-  /** `text_bpe_apply` — APPLY the trained merges to every document (r12
-    * verdict item 4: C156 trained merges but nothing consumed them — the
-    * tokenizer story ended one step early). Each doc's words become padded
-    * symbol states (the same double-space representation as training;
-    * word states concatenate with a 4-space run between words, which no
-    * ` l  r ` pattern can span, so merges never cross word boundaries),
-    * the [[bpeMerges]] trained replaces apply IN RANK ORDER as a chain of
-    * scan-local literal replaces (the merge list is a broadcast-sized model
-    * artifact — the corpus is touched once, codegen'd, no shuffle before
-    * the bounded output), and each doc declares its BPE token count plus
-    * its first 8 token ids under the deterministic vocabulary
-    * (post-merge distinct symbols, ordered — the id assignment a real
-    * tokenizer would freeze alongside the merges).
-    *
-    * The oracle re-runs training AND application end-to-end in DuckDB
-    * (the w/p CTE cascade from `text_bpe`, then the same replace chain
-    * via scalar subqueries), so a drift anywhere in train OR apply fails
-    * the row.
-    */
   /** Per-doc BPE token sequences under the trained merges — the apply
     * pass's core frame, exposed for the round-trip spec (tokens must
     * re-concatenate to the doc's lowercased text minus spaces).
@@ -781,6 +757,25 @@ object TextQueries {
         expr("filter(split(stx, '  '), x -> x != '')").as("syms"))
   }
 
+  /** `text_bpe_apply` — APPLY the trained merges to every document (r12
+    * verdict item 4: C156 trained merges but nothing consumed them — the
+    * tokenizer story ended one step early). Each doc's words become padded
+    * symbol states (the same double-space representation as training;
+    * word states concatenate with a 4-space run between words, which no
+    * ` l  r ` pattern can span, so merges never cross word boundaries),
+    * the [[bpeMerges]] trained replaces apply IN RANK ORDER as a chain of
+    * scan-local literal replaces (the merge list is a broadcast-sized model
+    * artifact — the corpus is touched once, codegen'd, no shuffle before
+    * the bounded output), and each doc declares its BPE token count plus
+    * its first 8 token ids under the deterministic vocabulary
+    * (post-merge distinct symbols, ordered — the id assignment a real
+    * tokenizer would freeze alongside the merges).
+    *
+    * The oracle re-runs training AND application end-to-end in DuckDB
+    * (the w/p CTE cascade from `text_bpe`, then the same replace chain
+    * via scalar subqueries), so a drift anywhere in train OR apply fails
+    * the row.
+    */
   def bpeApply(s: SparkSession, dir: String): DataFrame = {
     // r17 (guide §5): BOTH consumers below — the vocab distinct and the
     // per-doc surface — otherwise re-run the full [[bpeMerges]]-deep replace

@@ -43,28 +43,6 @@ final case class MemorySink(tableName: String) extends FlowSink {
       .start()
 }
 
-/** JDBC sink via foreachBatch — the reference's ClickHouse exporter
-  * (`pkg/clickhouse/export_clickhouse.go:81-87`) upgraded from one INSERT per
-  * record to one batched transactional write per micro-batch.
-  *
-  * DDL is an explicit setup step at `start()` (driver-side, before the
-  * stream): `recreate=true` overwrites with an empty frame — the JDBC
-  * writer's DROP + CREATE, mirroring the reference's startup DDL
-  * (`connect.go:70-91`, which also re-creates on every process start);
-  * `recreate=false` skips it for checkpoint resumes that must keep prior
-  * rows. Every micro-batch then appends — including a *re-tried* batch 0,
-  * which under the old `mode(id == 0)` keying would have re-run DDL
-  * mid-stream and dropped committed data. (Spark's JDBC append also creates
-  * a missing table, so `recreate=false` against a fresh database still
-  * works.)
-  *
-  * Insert failures are logged and the batch skipped, like the reference's
-  * warn-and-drop (`export_clickhouse.go:85-87`). Compiles against plain
-  * JDBC; needs the vendor driver jar on the runtime classpath. The real
-  * JDBC path (DDL + batched append + restart-resume) is executed end to end
-  * against embedded Derby in FlowSinkSpec — `writerOverride` remains only
-  * as the seam for a vendor-native (non-JDBC) writer.
-  */
 /** Idempotent JDBC UPSERT sink: per micro-batch, each key's row is
   * delete-then-inserted inside one transaction per partition — so a REPLAYED
   * batch (restart from an earlier checkpoint, foreachBatch's at-least-once
@@ -202,6 +180,28 @@ final case class UpsertJdbcSink(url: String, keyCols: Seq[String],
   }
 }
 
+/** JDBC sink via foreachBatch — the reference's ClickHouse exporter
+  * (`pkg/clickhouse/export_clickhouse.go:81-87`) upgraded from one INSERT per
+  * record to one batched transactional write per micro-batch.
+  *
+  * DDL is an explicit setup step at `start()` (driver-side, before the
+  * stream): `recreate=true` overwrites with an empty frame — the JDBC
+  * writer's DROP + CREATE, mirroring the reference's startup DDL
+  * (`connect.go:70-91`, which also re-creates on every process start);
+  * `recreate=false` skips it for checkpoint resumes that must keep prior
+  * rows. Every micro-batch then appends — including a *re-tried* batch 0,
+  * which under the old `mode(id == 0)` keying would have re-run DDL
+  * mid-stream and dropped committed data. (Spark's JDBC append also creates
+  * a missing table, so `recreate=false` against a fresh database still
+  * works.)
+  *
+  * Insert failures are logged and the batch skipped, like the reference's
+  * warn-and-drop (`export_clickhouse.go:85-87`). Compiles against plain
+  * JDBC; needs the vendor driver jar on the runtime classpath. The real
+  * JDBC path (DDL + batched append + restart-resume) is executed end to end
+  * against embedded Derby in FlowSinkSpec — `writerOverride` remains only
+  * as the seam for a vendor-native (non-JDBC) writer.
+  */
 final case class JdbcSink(url: String, table: String = "flows",
                           options: Map[String, String] = Map.empty,
                           recreate: Boolean = true,

@@ -124,6 +124,28 @@ class BackboneRegistrySpec extends SparkSpec {
     assert(BackboneRegistry.namesSize(spark) >= math.max(before, 1))
   }
 
+  test("the ANN policies keep one definition: no copied recall rollup, tombstone-probe fork or stand-in codebook") {
+    // the recall harness, the tombstone-aware probes and the stand-in
+    // codebook live in graft.operators.Similarity; a query file or the
+    // maintenance probe that types one out again forks the policy
+    val files = new java.io.File("src/main/scala/graft/queries").listFiles()
+      .filter(_.getName.endsWith(".scala")).toSeq :+
+      new java.io.File("src/main/scala/graft/MaintProbe.scala")
+    val forkedProbe = ("probeStaged(Ivf|Lsh)" + "Deletes").r
+    def copied(line: String): Boolean =
+      line.contains(".as(\"recall\")") ||
+        forkedProbe.findFirstIn(line).nonEmpty ||
+        (line.contains(".as(\"cid\")") && line.contains(".as(\"ce\")"))
+    val offenders = for {
+      f <- files
+      (line, i) <- new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .split("\n").toSeq.zipWithIndex
+      if copied(line)
+    } yield s"${f.getName}:${i + 1}"
+    assert(files.forall(_.isFile) && files.size > 10)
+    assert(offenders.isEmpty, s"ANN policy copies outside Similarity: $offenders")
+  }
+
   test("derived scalars cache per session and evict with clearSession") {
     val s2 = spark.newSession()
     val built = new AtomicInteger(0)

@@ -18,8 +18,7 @@ class IndexDeleteSpec extends SparkSpec {
 
   test("tombstone shadow, dirty-bucket-only apply, idempotent re-apply") {
     val emb = Tables.embeddings(spark, sf0001)
-    val cent = emb.filter(col("vec_id") < Similarity.ivfCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val cent = Similarity.standInCentroids(emb, Similarity.ivfCentroids)
     val t = "graft_spec_ivfdel"
     val tomb = t + "_tomb"
     Similarity.stageIvfBucketed(emb, cent, t, buckets)
@@ -32,7 +31,8 @@ class IndexDeleteSpec extends SparkSpec {
     val qe = emb.filter(col("vec_id") === 0).select("embedding")
       .head().getSeq[Float](0).toArray
     val cids = (0L until Similarity.ivfCentroids.toLong)
-    val pre = Similarity.probeStagedIvfDeletes(spark, t, tomb, qe, cids, k = 50)
+    val pre = Similarity.probeStagedIvf(spark, t, qe, cids, k = 50,
+        tombTableOpt = Some(tomb))
       .collect().map(_.getLong(0))
     assert(pre.nonEmpty && !pre.exists(delIds))
 
@@ -72,6 +72,45 @@ class IndexDeleteSpec extends SparkSpec {
     assert(post.toSeq == pre.toSeq)
   }
 
+  test("LSH tombstone probe: deleted rows never surface, compaction keeps the answer") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val planes = SimilarityQueries.stagedPlanes
+    val lshBuckets = SimilarityQueries.stagedLshBuckets
+    val t = "graft_spec_lshdel"
+    val tomb = t + "_tomb"
+    Similarity.stageLshBucketed(emb, t, planes, lshBuckets)
+    Bucketing.dropStaged(spark, tomb)
+    val deleted = emb.filter(col("vec_id") % 10 === 3)
+    Similarity.deleteStagedLsh(deleted, tomb, planes, lshBuckets)
+    val delIds = deleted.select("vec_id").collect().map(_.getLong(0)).toSet
+    val q = Similarity.withLshCode(emb.filter(col("vec_id") === 0), "embedding", planes)
+      .select(col("embedding"), col("lsh_code")).head()
+    val (qe, qcode) = (q.getSeq[Float](0).toArray, q.getLong(1))
+
+    // k spans the whole Hamming-1 ball, so every candidate is visible
+    val k = 100000
+    def probe(tombOpt: Option[String]) =
+      Similarity.probeStagedLsh(spark, t, qe, qcode, planes, k = k, tombTableOpt = tombOpt)
+    def joins(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j.joinType.toString
+      }
+    val plain = probe(None).collect().map(_.getLong(0))
+    assert(plain.exists(delIds), "the probed ball must hold a deleted row to shadow")
+    val shadowedProbe = probe(Some(tomb))
+    // no tombstone table -> the plain pruned scan; with one -> one anti-join
+    assert(joins(probe(None)).isEmpty)
+    assert(joins(shadowedProbe) == Seq("LeftAnti"))
+    val pre = shadowedProbe.collect().toSeq
+    assert(pre.map(_.getLong(0)) == plain.filterNot(delIds).toSeq)
+
+    val rewritten = Bucketing.compactDeletes(spark, t, tomb,
+      "vec_id", "lsh_code", Seq("lsh_code"), lshBuckets)
+    assert(rewritten.nonEmpty)
+    Bucketing.dropStaged(spark, tomb)
+    assert(probe(None).collect().toSeq == pre)
+  }
+
   test("LSH deletion: served results never contain a deleted residue") {
     val ids = SimilarityQueries.indexLshDelete(spark, sf0001)
       .collect().map(_.getLong(0))
@@ -81,8 +120,7 @@ class IndexDeleteSpec extends SparkSpec {
 
   test("re-apply converges after a crash between install and delete (r16 ADVICE)") {
     val emb = Tables.embeddings(spark, sf0001)
-    val cent = emb.filter(col("vec_id") < Similarity.ivfCentroids)
-      .select(col("vec_id").as("cid"), col("embedding").as("ce"))
+    val cent = Similarity.standInCentroids(emb, Similarity.ivfCentroids)
     val t = "graft_spec_ivfdel_crash"
     val tomb = t + "_tomb"
     Similarity.stageIvfBucketed(emb, cent, t, buckets)
